@@ -100,8 +100,14 @@ object Plans {
     // unexpectedly-laid-out artifact would silently UNDERCOUNT here,
     // and an undercount feeds the broadcast gate — wrongly forcing a
     // corpus-sized broadcast build is exactly the failure the gate
-    // exists to prevent. Data files and commit markers only.
-    val statuses = fs.listStatus(p)
+    // exists to prevent. Data files and commit markers only;
+    // `_`/`.`-prefixed directories (`_temporary` of an interrupted write,
+    // a streaming sink's `_spark_metadata`) are skipped, as Spark's file
+    // listing skips them.
+    val statuses = fs.listStatus(p).filterNot { st =>
+      val name = st.getPath.getName
+      st.isDirectory && (name.startsWith("_") || name.startsWith("."))
+    }
     val rogue = statuses.filter(st => st.isDirectory ||
       !(st.getPath.getName.endsWith(".parquet") ||
         st.getPath.getName.startsWith("_") ||

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair list — the step that
@@ -10,17 +9,21 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * every document in a component shares its cluster id (the component's
   * minimum id), so "keep one per cluster" becomes a groupBy.
   *
-  * Algorithm: iterative min-label propagation. Each vertex starts
-  * labeled with itself; every round it takes the min of its own and its
-  * neighbors' labels; converges in O(component diameter) rounds —
-  * near-dup clusters are dense (quasi-cliques), so diameter is tiny.
-  * Each round is one join + one aggregate, all partition-parallel; the
-  * driver only checks the convergence counter. [[Checkpoints.stable]]
-  * truncates lineage each round so plans don't grow with iterations
-  * (local blocks by default; `spark.graft.checkpointDir` switches to
-  * reliable DFS checkpoints for preemptible clusters).
-  * (GraphX/GraphFrames are the classic homes for this; a DataFrame-only
-  * version keeps the engine dependency-free and Catalyst-planned.)
+  * Algorithm: min-label propagation with pointer jumping, the recursive
+  * min-aggregate RaSQL evaluates on Spark. Set-up adds a self edge per
+  * vertex and partitions the edge list on `src` once. A round is then
+  * one plan: a grouped `min` over `edges ⋈ broadcast(labels)` (the self
+  * edge brings the vertex's own label into the aggregate), then a jump
+  * through the same broadcast to that minimum's own label. Labels stay
+  * in-component and only decrease, so the fixed point is the component
+  * minimum. Jumping collapses chains whose ids grow along them in
+  * O(log length) rounds; the worst case (a long path with shuffled ids)
+  * stays O(diameter), as without it. A round costs two jobs,
+  * the broadcast and the checkpoint of the new labels: the change count
+  * is observed on that checkpoint and the aggregate reuses the edge
+  * partitioning ([[Fixpoint]]). Each round's checkpoint truncates
+  * lineage ([[Checkpoints.stable]]). A DataFrame-only version keeps the
+  * engine free of GraphX/GraphFrames and Catalyst-planned.
   */
 object Clustering {
 
@@ -45,94 +48,51 @@ object Clustering {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
       driverSolveMaxEdges: Long = DefaultDriverSolveMaxEdges): DataFrame = {
-    // materialize pairs ONCE — the union below references it twice, and
-    // without this the (often expensive) pair-generation plan executes
-    // once per branch
-    val p = pairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
+    val spark = pairs.sparkSession
+    val op = "connectedComponents"
+    // Adaptive execution: a small graph is cheaper to solve on the driver
+    // (the loop's cost is per-round scheduling, not data). The id
+    // ordering must match Spark's min() for identical cluster ids.
+    val input = pairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull)
-      .transform(Checkpoints.stable)
-
-    // Adaptive execution: a graph this small is cheaper to solve on the
-    // driver than to iterate over — the loop's cost is dominated by
-    // per-round job scheduling, not data. The id ordering must match
-    // Spark's min() for identical cluster ids.
-    // (round-16 note: a limit(ceiling+1)-collect probe was tried here
-    // to fuse the gate and the solve into one job — CollectLimitExec's
-    // scale-up rounds turn an unreached limit over N partitions into
-    // ~log₄(N) jobs, strictly worse than count+collect; and raising
-    // spark.sql.limit.initialNumPartitions makes the huge-graph first
-    // round collect up to partitions×ceiling rows at the driver. The
-    // two-job gate stays.)
-    val sameType = p.schema("_a").dataType == p.schema("_b").dataType
-    val keyOrdering = if (sameType) minOrdering(p.schema("_a").dataType) else None
-    if (keyOrdering.isDefined && p.count() <= driverSolveMaxEdges) {
-      val out = driverSolve(p.sparkSession, p.schema("_a").dataType,
-        p.collect(), keyOrdering.get)
-      CheckpointBridge.release(p)
-      return out
+    val idType = input.schema("_a").dataType
+    val ord = if (input.schema("_b").dataType == idType) minOrdering(idType) else None
+    val p = Fixpoint.gate(spark, op, input, if (ord.isDefined) driverSolveMaxEdges else -1L) match {
+      case Left(rows) => return driverSolve(spark, idType, rows, ord.get)
+      case Right(p) => p
     }
-
-    val edges = p.select(col("_a").as("src"), col("_b").as("dst"))
-      .unionByName(p.select(col("_b").as("src"), col("_a").as("dst")))
-      .distinct()
-      .transform(Checkpoints.stable)
-    // edges (eagerly checkpointed) is the only consumer of p — release
-    // p's blocks now; checkpoints are otherwise freed only when the
-    // ContextCleaner GCs them, which leaks across repeated calls on a
-    // long-lived driver
-    CheckpointBridge.release(p)
-
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .transform(Checkpoints.stable)
-    // the checkpoint superseded by the current round, released as soon
-    // as the round's replacement has materialized
-    var prevCkpt = labels
-
-    // Checkpointed frames carry no size statistics, so Catalyst cannot
-    // see that the labels side is vertex-sized (usually tiny next to the
-    // edge list) and would sort-merge-join the FULL edge list every
-    // round. Broadcasting labels keeps edges in place: per round, the
-    // only shuffle left is the vertex-sized partial-aggregated groupBy.
-    val nVertices = labels.count()
-    val hintLabels: DataFrame => DataFrame =
+    // both directions plus a self edge per endpoint, deduplicated; the
+    // self-edge count is the vertex count the broadcast decision needs
+    val (edges, nVertices) = Fixpoint.inRound(spark, op, 0)(Fixpoint.stableCounted(
+      p.select(inline(array(
+          struct(col("_a").as("src"), col("_b").as("dst")),
+          struct(col("_b").as("src"), col("_a").as("dst")),
+          struct(col("_a").as("src"), col("_a").as("dst")),
+          struct(col("_b").as("src"), col("_b").as("dst")))))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("src"))
+        .distinct(),
+      count_if(col("src") === col("dst"))))
+    Checkpoints.release(p)
+    // labels are vertex-sized: broadcasting them keeps the edges in place
+    val hint: DataFrame => DataFrame =
       if (nVertices <= 10000000L) broadcast(_) else identity
-
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // round part 1: take the min of own and neighbors' labels
-      val neighborMin = edges
-        .join(hintLabels(labels.select(col("id").as("dst"), col("label").as("dst_label"))),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min("dst_label").as("neighbor_min"))
-      val afterMin = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("neighbor_min"), col("label"))).as("mid_label"))
-      // round part 2: pointer jump — follow the label's own label, which
-      // collapses chains exponentially (O(log diameter) rounds total;
-      // plain propagation needs O(diameter), painful on path-like
-      // near-dup graphs)
-      val jump = afterMin.select(col("id").as("_jid"), col("mid_label").as("_jlabel"))
-      val updated = afterMin
-        .join(hintLabels(jump), col("mid_label") === col("_jid"), "left")
-        .select(col("id"), col("label"),
-          coalesce(col("_jlabel"), col("mid_label")).as("new_label"))
-        .transform(Checkpoints.stable)
-      changed = updated.filter(col("new_label") < col("label")).count()
-      CheckpointBridge.release(prevCkpt)
-      prevCkpt = updated
-      labels = updated.select(col("id"), col("new_label").as("label"))
-      iter += 1
+    val labels = Fixpoint.iterate(spark, op, maxIter) {
+      case None => // every label is still its own id: no lookup needed
+        (edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("label")),
+          count_if(col("label") < col("id")))
+      case Some(prev) =>
+        val l = hint(prev.select(col("id").as("_v"), col("label").as("_l")))
+        val next = edges.join(l, col("dst") === col("_v"))
+          .groupBy(col("src").as("id"))
+          .agg(min(col("_l")).as("_m"),
+            max(when(col("src") === col("dst"), col("_l"))).as("_old"))
+          // pointer jump: the neighbourhood minimum's own label
+          .join(l, col("_m") === col("_v"))
+          .select(col("id"), col("_l").as("label"), col("_old"))
+        (next, count_if(col("label") < col("_old")))
     }
-    // the returned frame reads only the LAST round's checkpoint; edges
-    // is no longer referenced
-    CheckpointBridge.release(edges)
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
+    // the returned frame reads only the last round's checkpoint
+    Checkpoints.release(edges)
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
@@ -292,16 +252,13 @@ object Clustering {
       .select(coalesce(col("_ra"), col("_a")).as("_ca"),
         coalesce(col("_rb"), col("_b")).as("_cb"))
       .filter(col("_ca") =!= col("_cb"))
-    // no extra checkpoint on cc: both connectedComponents paths return
-    // recompute-free frames (the distributed path a narrow select over
-    // its final-round checkpoint, the driver path local rows) — a second
-    // localCheckpoint would copy the data and orphan the inner blocks
+    // connectedComponents checkpoints its own copy of the contracted
+    // edges and returns a frame that needs no recomputation (a select
+    // over its last round's checkpoint, or local rows), so p and touched
+    // are dead as soon as it returns
     val cc = connectedComponents(contracted, "_ca", "_cb")
-    cc.count() // materialize before releasing its inputs
-    // connectedComponents eagerly checkpointed its own copy of the
-    // contracted edges, so p and touched (delta-sized) are dead
-    CheckpointBridge.release(p)
-    CheckpointBridge.release(touched)
+    Checkpoints.release(p)
+    Checkpoints.release(touched)
     val rootMap = cc.select(col("id").as("_oldroot"), col("cluster_id").as("_newroot"))
     val storedUpd = stored
       .select(col(idCol), col(clusterCol))

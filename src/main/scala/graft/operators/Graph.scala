@@ -2,9 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph centrality: fixed-iteration PageRank in exact integer
   * micro-units.
@@ -28,19 +26,18 @@ import org.apache.spark.storage.StorageLevel
   * equal ranks in any engine — the ExactAgg discipline applied to an
   * iterative algorithm.
   *
-  * Scale shape (100 TB): per iteration the plan is one edges⋈ranks
-  * equi-join (shuffle on the edge's src key) + one dst-keyed sum
-  * (partial-combined) + one node-keyed join to re-attach degrees —
-  * the canonical Pregel superstep expressed declaratively, no
-  * driver-side graph state. Edges and degrees are computed once and
-  * persisted (at cluster scale: checkpointed) so the k iterations
-  * re-read a materialized edge list instead of re-deriving it; ranks
-  * are node-sized, never edge-sized. The iteration count is a fixed
-  * small constant, so the whole computation is one static DAG that
-  * Catalyst/AQE plans end-to-end. Small graphs short-circuit to a
-  * driver-side solve of the same recurrence (see
-  * [[DefaultDriverSolveMaxEdges]]) — identical ranks, none of the
-  * per-superstep scheduling latency.
+  * Scale shape (100 TB): a superstep is one edges⋈ranks equi-join on
+  * src + one dst-keyed sum (partial-combined) — the Pregel superstep
+  * expressed declaratively, no driver-side graph state. The closure edge
+  * list is built once, partitioned and sorted on src, and kept as a
+  * [[Fixpoint.stable]] checkpoint, which keeps that layout (the Pregelix
+  * edge partitioning): a superstep's only shuffle is the contribution
+  * re-key, and it costs one job. (A persisted cache keeps the layout
+  * too, but adaptive execution re-reads a cache in a job of its own
+  * every time a plan scans it.) The k supersteps are one static DAG
+  * that Catalyst/AQE plans end-to-end. Small graphs take a driver-side
+  * solve of the same recurrence (see [[DefaultDriverSolveMaxEdges]]) —
+  * identical ranks, none of the per-superstep scheduling latency.
   */
 object Graph {
 
@@ -64,183 +61,127 @@ object Graph {
     * rank_micro) — rank in micro-units after `iterations` damped
     * supersteps from a uniform 10⁶ start.
     *
-    * Adaptive execution: the deduped pair list is counted first; at or
-    * below `driverSolveMaxEdges` undirected-closure edges the fixed
-    * iterations run on the driver over the collected (bounded) edge
-    * list — identical integer recurrence, identical ranks, none of the
-    * per-superstep scheduling latency that dominates small graphs.
-    * Above the ceiling the declarative superstep loop runs (pass 0 to
-    * force it).
-    */
-  /** The returned frame is backed by a node-sized local checkpoint /
-    * local rows (that is what lets the edge-sized caches drop at
-    * return instead of living as long as the caller's plan); a
-    * long-lived driver calling this repeatedly should
-    * `CheckpointBridge.release` the frame once done with it rather
-    * than waiting for the ContextCleaner. */
+    * Adaptive execution: the closure edge list is materialised once and
+    * counted in the same pass ([[Fixpoint.gate]]); at or below
+    * `driverSolveMaxEdges` closure edges the iterations run on the
+    * driver over the collected list, above it the superstep loop runs
+    * over the same checkpoint (pass 0 to force it).
+    *
+    * The returned frame is backed by a node-sized local checkpoint /
+    * local rows, so the edge-sized state is released at return; a
+    * long-lived driver should `Checkpoints.release` it once done. */
   def pageRankUndirectedMicro(pairs: DataFrame, aCol: String, bCol: String,
       iterations: Int,
       driverSolveMaxEdges: Long = DefaultDriverSolveMaxEdges): DataFrame = {
     require(iterations >= 1 && iterations <= 10,
       s"iterations must be in [1,10], got $iterations")
-    // dedup + null-filter ONCE, distributed (at 100 TB the raw pair
-    // list is the big side; what's collected is the deduped
-    // projection), materialized so the size probe and the superstep
-    // loop don't re-run the upstream plan
-    val p = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .transform(Checkpoints.stable)
-    // each deduped pair yields ≤ 2 closure edges. One BOUNDED collect
-    // decides the path AND feeds the solve (a separate count() was a
-    // second full scan of the checkpoint): limit caps driver exposure
-    // at ceiling/2 + 1 rows, and a short read means the graph fits.
-    val lim = (math.min(driverSolveMaxEdges, Int.MaxValue.toLong - 2L) / 2 + 1).toInt
-    val head = p.limit(lim).collect()
-    if (head.length < lim) {
-      val out = driverSolve(pairs.sparkSession, head, iterations)
-      CheckpointBridge.release(p)
-      return out
+    val spark = pairs.sparkSession
+    val op = "pageRankUndirectedMicro"
+    // the Int cap keeps the driver solve's edge arrays addressable
+    val edges = Fixpoint.gate(spark, op, closure(pairs, aCol, bCol),
+      math.min(driverSolveMaxEdges, Int.MaxValue.toLong)) match {
+      case Left(rows) => return driverSolve(spark, rows, iterations)
+      case Right(edges) => edges
     }
-    val (ranks, edges, deg) = pageRankFrame(p, "src", "dst", iterations)
-    // Materialize the closure caches FIRST and release the pair
-    // checkpoint BEFORE any superstep runs: above the driver ceiling
-    // the pair list and the (2×) closure cache are BOTH edge-scale, and
-    // holding them simultaneously through the iterations oversubscribes
-    // the storage pool — the measured sf10 regime (59M pairs + 118M
-    // closure edges on an 8 GB heap) failed 37 cache unrolls and paid
-    // disk re-reads in every superstep. One deg.count() builds both
-    // caches in a single job; after it, the supersteps read only the
-    // sorted closure blocks.
-    deg.count()
-    CheckpointBridge.release(p)
-    // Materialize the node-sized result so the edge-sized caches can be
-    // dropped NOW instead of pinning executor storage until the caller's
-    // frame is GC'd — on a long-lived driver the edge list is the big
-    // side and repeated pagerank calls would otherwise accumulate it.
-    val out = Checkpoints.stable(ranks)
-    edges.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
+    // the k supersteps run as one action; the node-sized result frees the edges
+    val out = Fixpoint.inRound(spark, op, iterations)(
+      Checkpoints.stable(supersteps(edges, iterations)))
+    Checkpoints.release(edges)
     out
   }
 
   /** The driver-side fixed-iteration solve: the same integer recurrence
-    * over the collected deduped pair list. Primitive throughout (dense
-    * node indexes, the undirected closure packed as sorted+deduped
-    * (srcIdx<<32|dstIdx) longs, long-array ranks/degrees/sums) — the
-    * boxed HashMap form it replaced spent ~1 s of the bench wall on
-    * autoboxing at the 2M-edge ceiling; this is ~10×. The arithmetic is
-    * unchanged — `rank div deg` contributions, `150000 + (85·Σ) div
-    * 100` damping — and integer sums are order-free, so ranks stay
-    * BITWISE equal to the distributed loop (spec-pinned). */
+    * over the collected closure edges, primitive throughout (dense node
+    * indexes, int edge arrays, long rank/degree/sum arrays). Integer sums
+    * are order-free, so ranks stay BITWISE equal to the distributed loop
+    * (spec-pinned). */
   private def driverSolve(spark: SparkSession, rows: Array[Row],
       iterations: Int): DataFrame = {
-    val idToIdx = new java.util.HashMap[Long, Integer](rows.length * 2)
+    val idToIdx = new java.util.HashMap[Long, Integer](rows.length)
     val idsBuf = new java.util.ArrayList[java.lang.Long]()
     def idx(n: Long): Int = {
       var i = idToIdx.get(n)
       if (i == null) { i = idToIdx.size(); idToIdx.put(n, i); idsBuf.add(n) }
       i
     }
-    val packed = new Array[Long](rows.length * 2)
-    var m = 0
-    rows.foreach { r =>
-      val a = idx(r.getLong(0)); val b = idx(r.getLong(1))
-      packed(m) = (a.toLong << 32) | (b.toLong & 0xffffffffL); m += 1
-      packed(m) = (b.toLong << 32) | (a.toLong & 0xffffffffL); m += 1
-    }
-    // sort + in-place dedup = the closure's set semantics (an input
-    // containing both (a,b) and (b,a) contributes each edge once)
-    java.util.Arrays.sort(packed, 0, m)
-    var e = 0
-    var i = 0
-    while (i < m) {
-      if (i == 0 || packed(i) != packed(i - 1)) { packed(e) = packed(i); e += 1 }
-      i += 1
-    }
+    val src = rows.map(r => idx(r.getLong(0)))
+    val dst = rows.map(r => idx(r.getLong(1)))
     val n = idToIdx.size()
     val deg = new Array[Long](n)
-    i = 0
-    while (i < e) { deg((packed(i) >>> 32).toInt) += 1; i += 1 }
+    src.foreach(s => deg(s) += 1)
     var rank = Array.fill(n)(1000000L)
     for (_ <- 1 to iterations) {
       val sums = new Array[Long](n)
-      i = 0
-      while (i < e) {
-        val src = (packed(i) >>> 32).toInt
+      var i = 0
+      while (i < src.length) {
         // non-negative: floor ≡ Spark's div
-        sums((packed(i) & 0xffffffffL).toInt) += rank(src) / deg(src)
+        sums(dst(i)) += rank(src(i)) / deg(src(i))
         i += 1
       }
       rank = sums.map(s => 150000L + 85L * s / 100L)
     }
     val out = new java.util.ArrayList[Row](n)
-    i = 0
-    while (i < n) { out.add(Row(idsBuf.get(i).longValue(), deg(i), rank(i))); i += 1 }
+    (0 until n).foreach(i => out.add(Row(idsBuf.get(i).longValue(), deg(i), rank(i))))
     spark.createDataFrame(out, StructType(Seq(
       StructField("node", LongType), StructField("deg", LongType),
       StructField("rank_micro", LongType))))
   }
 
-  /** The un-materialized superstep pipeline (plus the two persisted
-    * frames backing it), split out so plan contracts can assert the
-    * per-superstep shuffle count on the REAL iteration plan — the
-    * public method checkpoints the result, which truncates the plan to
-    * an opaque scan. */
+  /** The un-materialized superstep pipeline over the checkpointed
+    * closure (plus the closure and the degree frame, for the caller to
+    * release or inspect), split out so plan contracts can assert the
+    * per-superstep shuffle count on the REAL iteration plan — the public
+    * method checkpoints the result, which truncates the plan to an opaque
+    * scan. */
   private[graft] def pageRankFrame(pairs: DataFrame, aCol: String,
       bCol: String, iterations: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(iterations >= 1 && iterations <= 10,
-      s"iterations must be in [1,10], got $iterations")
+    val edges = Fixpoint.stable(closure(pairs, aCol, bCol))
+    (supersteps(edges, iterations), edges, degrees(edges))
+  }
+
+  /** The undirected closure of `pairs` as (src, dst), deduplicated, laid
+    * out for every superstep (at 100 TB the edge list is the big side, so
+    * every avoided edge-sized exchange/sort is the lever):
+    *  - repartition on src FIRST: the dedup's (src, dst) clustering is
+    *    then satisfied without an exchange of its own. The partition count
+    *    is explicit so adaptive execution cannot coalesce it, and each
+    *    superstep's dst-keyed sum lands on the same partitioning;
+    *  - sortWithinPartitions(src): each superstep's sort-merge join
+    *    streams the edge blocks instead of re-sorting k·|E| rows. */
+  private def closure(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val ab = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
       // a null endpoint would inflate the partner's degree and leak its
       // rank share to a phantom node that vanishes at the next join —
       // silently wrong centrality (Clustering filters the same way)
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    // ONE closure shuffle, then a cache that satisfies every superstep's
-    // distribution AND ordering (round-14 verdict item 2 — the sf10
-    // re-shape; at 100 TB the edge list is the big side, so every
-    // avoided edge-sized exchange/sort is the lever):
-    //  - repartition on src FIRST, then distinct(): hash-clustering by
-    //    src already co-locates equal (src, dst) rows, so the dedup's
-    //    ClusteredDistribution(src, dst) is satisfied and plans WITHOUT
-    //    its own exchange — the previous distinct-then-repartition
-    //    shape paid two full edge-list shuffles in the build;
-    //  - sortWithinPartitions(src) before caching: the cached scan then
-    //    exposes src-ordering, so each superstep's sort-merge join
-    //    STREAMS the edge blocks — the unsorted cache re-sorted all
-    //    k·|E| rows across the iterations (at sf10: 3 × 118M-row sorts
-    //    competing with the cache for the same unified memory);
-    //  - deg inherits src-clustering from its groupBy (no exchange) and
-    //    is sorted once too, and each superstep's dst-sum output is
-    //    clustered on dst (= the next join's key after rename), so the
-    //    only per-iteration shuffle is the unavoidable contribution
-    //    re-key from src to dst (partial-combined map-side).
-    val edges = ab
-      .union(ab.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
+    ab.union(ab.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("src"))
       .distinct()
       .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
-    // state carries (node, deg, rank_micro); deg rides along so each
-    // superstep needs exactly one join back onto node-sized state
-    var ranks = deg.select(col("src").as("node"), col("deg"),
-      lit(1000000L).as("rank_micro"))
-    for (_ <- 1 to iterations) {
-      val sums = edges
+  /** (node, deg) over the closure; grouped on src, so no exchange. */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+
+  /** `iterations` supersteps over the checkpointed closure `edges`. Ranks
+    * carry (node, deg, rank_micro), so a superstep is ONE join: the
+    * closure is symmetric, so a node's incoming-edge count in the
+    * dst-keyed sum is its degree again. The sum's exchange is the only
+    * per-superstep shuffle (partial-combined map-side) and leaves ranks
+    * partitioned like the edges, so the next join shuffles neither side;
+    * the merge hint keeps that plan when adaptive execution sees a small
+    * side (a broadcast switch would add a job per superstep). */
+  private def supersteps(edges: DataFrame, iterations: Int): DataFrame =
+    (1 to iterations).foldLeft(
+      degrees(edges).withColumn("rank_micro", lit(1000000L))) { (ranks, _) =>
+      edges.hint("merge")
         .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank_micro div deg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("s"))
-      ranks = deg
-        .join(sums.withColumnRenamed("dst", "src"), "src")
-        .select(col("src").as("node"), col("deg"),
+        .groupBy(col("dst").as("node"))
+        .agg(count(lit(1)).as("_n"), sum(expr("rank_micro div deg")).as("s"))
+        .select(col("node"), col("_n").as("deg"),
           (lit(150000L) + expr("(85 * s) div 100")).as("rank_micro"))
     }
-    (ranks, edges, deg)
-  }
 }

@@ -724,6 +724,69 @@ class ClusteringSpec extends SparkSpec {
     (after4 - after1) should be <= 3
   }
 
+  // a planted path whose ids rise along it, as in the benchmark's graph:
+  // 7 rounds with pointer jumping
+  private def risingPath = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+
+  test("distributed CC takes at most 3 jobs per round, each described by its round") {
+    import org.apache.spark.graftbridge.JobLog
+    val (cc, jobs) = JobLog.descriptions(spark.sparkContext)(
+      Clustering.connectedComponents(risingPath, "id_a", "id_b", driverSolveMaxEdges = 0))
+    cc.as[(Long, Long)].collect().map(_._2).distinct shouldBe Array(1L)
+    val round = "connectedComponents round (\\d+)".r
+    val rounds = jobs.map { case round(i) => i.toInt }
+    rounds.distinct shouldBe (0 to rounds.max)
+    jobs.size should be <= 3 * rounds.max + 3
+  }
+
+  test("the driver-solve gate launches no job beyond the input's materialisation") {
+    import org.apache.spark.graftbridge.JobLog
+    val sc = spark.sparkContext
+    val input = JobLog.descriptions(sc)(graft.operators.Checkpoints.stable(
+      risingPath.select(col("id_a").as("_a"), col("id_b").as("_b"))
+        .filter(col("_a").isNotNull && col("_b").isNotNull)))._2
+    val driver = JobLog.descriptions(sc)(
+      Clustering.connectedComponents(risingPath, "id_a", "id_b"))._2
+    driver.size shouldBe input.size + 1 // + the solve's collect
+  }
+
+  test("fixpoint jobs restore the caller's job description") {
+    import org.apache.spark.graftbridge.JobLog
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (cc, jobs) = JobLog.descriptions(sc) {
+        val cc = Clustering.connectedComponents(risingPath, "id_a", "id_b",
+          driverSolveMaxEdges = 0)
+        cc.count()
+        cc
+      }
+      sc.getLocalProperty("spark.job.description") shouldBe "caller"
+      val (inside, after) = jobs.span(_.startsWith("connectedComponents round "))
+      inside should not be empty
+      after.distinct shouldBe Seq("caller") // the count, after the operator returned
+      graft.operators.Checkpoints.release(cc)
+    } finally sc.setJobDescription(null)
+  }
+
+  test("self edges: loops, duplicates, reversed pairs and string ids agree across paths") {
+    def both[T: org.apache.spark.sql.Encoder](pairs: org.apache.spark.sql.DataFrame) = {
+      def run(gate: Long) = Clustering.connectedComponents(pairs, "id_a", "id_b",
+        driverSolveMaxEdges = gate).as[T].collect().toSet
+      val driver = run(Clustering.DefaultDriverSolveMaxEdges)
+      run(0L) shouldBe driver
+      driver
+    }
+    // 1–2 given as a loop, duplicates and both directions; 7 has only its
+    // own loop; 8–9 reversed with a loop on the larger end
+    both[(Long, Long)](Seq((1L, 1L), (1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L),
+        (7L, 7L), (9L, 8L), (8L, 9L), (9L, 9L)).toDF("id_a", "id_b")) shouldBe
+      Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 8L), (9L, 8L))
+    both[(String, String)](Seq(("b", "b"), ("b", "a"), ("a", "b"), ("c", "b"),
+        ("z", "z"), ("y", "x"), ("y", "x")).toDF("id_a", "id_b")) shouldBe
+      Set(("a", "a"), ("b", "a"), ("c", "a"), ("z", "z"), ("x", "x"), ("y", "x"))
+  }
+
   test("property: components match brute-force union-find on random graphs") {
     val rnd = new scala.util.Random(13)
     (1 to 3).foreach { _ =>

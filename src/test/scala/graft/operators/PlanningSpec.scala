@@ -108,6 +108,25 @@ class PlansHelpersSpec extends graft.SparkSpec {
       graft.functions.Plans.parquetRowCount(spark, dir)
   }
 
+  test("parquetRowCount skips _- and .-prefixed directories, as Spark's file listing does") {
+    val dir = tmpDir("plans_rowcount_hidden")
+    spark.range(500).repartition(2).write.mode("overwrite").parquet(dir)
+    // leftovers of an interrupted write and of a streaming sink: their
+    // files are not part of the table and must not be counted
+    Seq("_temporary/0", "_spark_metadata", ".staging").foreach { sub =>
+      spark.range(7).write.parquet(s"$dir/$sub")
+    }
+    graft.functions.Plans.parquetRowCount(spark, dir) shouldBe 500L
+  }
+
+  test("parquetRowCount still fails on any other subdirectory") {
+    val dir = tmpDir("plans_rowcount_subdir")
+    spark.range(50).write.mode("overwrite").parquet(dir)
+    spark.range(7).write.parquet(s"$dir/extra")
+    an[IllegalArgumentException] should be thrownBy
+      graft.functions.Plans.parquetRowCount(spark, dir)
+  }
+
   test("shufflePartitions is volume-aware: floored at parallelism, capped at the session conf") {
     import graft.functions.Plans
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt

@@ -57,6 +57,31 @@ class GraphSpec extends SparkSpec {
     rows(driver) shouldBe rows(dist)
   }
 
+  test("distributed PageRank: one job per superstep, none re-reading its state") {
+    import org.apache.spark.graftbridge.JobLog
+    val path = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    def jobs(k: Int) = JobLog.descriptions(spark.sparkContext)(
+      Graph.pageRankUndirectedMicro(path, "a", "b", k, driverSolveMaxEdges = 0L))._2
+    val (four, five) = (jobs(4), jobs(5))
+    val setup = five.count(_ == "pageRankUndirectedMicro round 0")
+    // the five supersteps are one action: one shuffle job each plus the
+    // final stage; a persisted state would add two cache jobs per superstep
+    five.drop(setup) shouldBe Seq.fill(6)("pageRankUndirectedMicro round 5")
+    five.size - four.size shouldBe 1
+  }
+
+  test("the PageRank driver-solve gate launches no job beyond the input's materialisation") {
+    import org.apache.spark.graftbridge.JobLog
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (2L, 3L)).toDF("a", "b")
+    val input = JobLog.descriptions(sc)(Checkpoints.stable(
+      pairs.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull).distinct()))._2
+    val driver = JobLog.descriptions(sc)(
+      Graph.pageRankUndirectedMicro(pairs, "a", "b", 3))._2
+    driver.size shouldBe input.size + 1 // + the solve's collect
+  }
+
   test("higher-degree hubs accumulate more rank on a star graph") {
     // star: node 0 linked to 1..8 — the hub must outrank every leaf
     val pairs = (1L to 8L).map(i => (0L, i))

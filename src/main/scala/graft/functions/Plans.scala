@@ -24,8 +24,8 @@ object Plans {
     * floor = min(defaultParallelism, cap),
     * cap = `spark.sql.shuffle.partitions`) instead of the session
     * constant alone. The floor keeps every core busy (these stages are
-    * CPU-bound — idle cores are pure waste, and the round-16
-    * FanoutProbe measured cap as optimal for the token-verify family
+    * CPU-bound — idle cores are pure waste, and a round-16 fan-out
+    * sweep measured cap as optimal for the token-verify family
     * at bench SF); the cap bounds scheduler pressure; in between the
     * fan-out grows with the DATA, so an ingest-batch-sized probe on a
     * 12000-partition cluster session no longer pays a 12000-task

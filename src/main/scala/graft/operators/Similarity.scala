@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableRound
 
@@ -83,6 +84,15 @@ object Similarity {
       .limit(k)
   }
 
+  /** Per-query top-k: the `k` best rows of each `query_id` under
+    * `order` (a per-query window row number, dropped). Every batched
+    * ranking here — in-memory and stored IVF, ADC, re-rank, fusion —
+    * ends in this. */
+  private def topKPerQuery(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("_r", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("_r") <= k)
+      .drop("_r")
+
   /** Auto-sized sign-cell width for the bucketed generators: the number
     * of leading sign bits that keeps EXPECTED bucket occupancy at
     * `targetBucket` rows — nBits = ⌈log₂(⌈n / targetBucket⌉)⌉, clamped
@@ -125,73 +135,6 @@ object Similarity {
     (0 until nBits)
       .map(j => when(element_at(asDouble(vec), j + 1) > 0.0, lit(1L << j)).otherwise(0L))
       .reduce[Column](_ + _)
-
-  /** IVF ANN with a TRAINED coarse quantizer (vs [[signBucket]]'s
-    * data-oblivious hashing): k-means centroids partition the corpus
-    * into `nCentroids` cells; each query probes only its `nProbe`
-    * nearest cells. This is the classic inverted-file layout — at 100 TB
-    * the cell id becomes the partition/bucket column of the stored
-    * index, so a probe is partition pruning + a scan of nProbe/nCentroids
-    * of the corpus. Recall rises with nProbe (nProbe = nCentroids
-    * degenerates to brute force).
-    *
-    * The quantizer trains distributed (MLlib KMeans over the corpus);
-    * cell assignment is one model.transform; the query→cell probe list
-    * is tiny (queries × centroids) and broadcast. Deterministic for a
-    * fixed seed. */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nCentroids: Int, nProbe: Int, seed: Long = 42L,
-      quantizerIter: Int = 5, trainFraction: Double = 0.25): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.sql.expressions.Window
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
-    // Quantizer training economics: a COARSE quantizer doesn't need
-    // convergence or the full corpus — cell quality for ROUTING
-    // saturates with a few Lloyd rounds over a sample (classic IVF
-    // practice). So: deterministic hash-sample of the corpus, cached so
-    // each Lloyd round doesn't re-scan the source, random init (the
-    // k-means|| parallel init spends extra full passes picking
-    // marginally better seeds — routing is insensitive to that).
-    val train = Sampling.deterministic(featured, idCol, trainFraction)
-      .select("_feat").persist()
-    val model = new KMeans()
-      .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
-      .setInitMode("random")
-      .setFeaturesCol("_feat").setPredictionCol("_cell")
-      .fit(train)
-    train.unpersist(blocking = false) // fit is eager; sample no longer needed
-    val indexed = model.transform(featured).drop("_feat")
-
-    // query → nProbe nearest cells by L2 (k-means' own metric); the
-    // centers frame is centroids-sized, the probe list queries×nProbe
-    val centers = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("_cell", "_center")
-    val probeRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("_d2").asc, col("_cell").asc)
-    val probes = queries
-      .select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_d2", l2sq(asDouble(col("_qvec")), col("_center")))
-      .withColumn("_pr", row_number().over(probeRank))
-      .filter(col("_pr") <= nProbe)
-      .select("query_id", "_qvec", "_cell")
-
-    val hitRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    indexed.join(broadcast(probes), Seq("_cell"))
-      .select(
-        col("query_id"),
-        col(idCol),
-        PortableRound.round4(cosine(col(vecCol), col("_qvec"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(hitRank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
 
   /** Embedding near-dup pairs at corpus scale: sign-bucket candidate
     * generation + exact cosine verify — the composition
@@ -246,7 +189,6 @@ object Similarity {
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
       labelCol: String, anchorPred: Column, k: Int, nBits: Int = 8,
       broadcastBuild: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // same stream-repartition + optional-broadcast discipline as
     // bucketedNearDupPairs: the cosine verify is tiny-bytes/CPU-heavy,
     // and without the explicit-N spread AQE coalesces it onto a few
@@ -285,251 +227,6 @@ object Similarity {
     hardNegatives(df, idCol, vecCol, labelCol, anchorPred, k,
       autoSignBits(df, vecCol, targetBucket), broadcastBuild)
 
-  /** IVF ANN with a DETERMINISTIC coarse quantizer: centroids are the
-    * `nCentroids` lowest-id corpus vectors, and routing is by (rounded)
-    * cosine affinity — spherical IVF, the standard layout for a cosine
-    * metric. Same probe semantics as [[ivfTopK]] (assign every corpus
-    * vector to its best cell, probe the query's `nProbe` best cells,
-    * exact top-k within the probed cells), but every step is closed-form
-    * — no iterative training — so the whole query is SQL-expressible and
-    * oracle-checkable. [[ivfTopK]] (trained quantizer) stays the
-    * production variant; this one pins down the probe/rank semantics.
-    *
-    * Plan shape: centroid list is nCentroids rows (broadcast); cell
-    * assignment is a broadcast cross product partial-aggregated to ONE
-    * row per corpus vector via max_by — only corpus-sized data ever
-    * shuffles. Tie-breaks everywhere (affinity ties → lowest cell, score
-    * ties → lowest id) keep it deterministic on both engines. */
-  def ivfTopKDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centers = detCenters(corpus, idCol, vecCol, nCentroids)
-    val assigned = detAssign(corpus, idCol, vecCol, centers)
-    val probes = detProbes(queries, qIdCol, qVecCol, centers, nProbe)
-    val hitRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    assigned.join(broadcast(probes), Seq("_cell"))
-      .select(
-        col("query_id"),
-        col("_id").as(idCol),
-        PortableRound.round4(cosine(col("_v"), col("_qvec"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(hitRank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
-
-  /** Deterministic coarse-quantizer centroids: the `nCentroids`
-    * lowest-id corpus vectors, numbered 0..n-1 by id order. Tiny frame —
-    * always broadcast by callers. */
-  private def detCenters(corpus: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    corpus
-      .orderBy(col(idCol)).limit(nCentroids)
-      .select(col(idCol).as("_cid"), asDouble(col(vecCol)).as("_center"))
-      .withColumn("_cell", row_number().over(Window.orderBy(col("_cid"))) - 1)
-      .select("_cell", "_center")
-  }
-
-  /** Rounded spherical (cosine) affinity between a `_v` vector and a
-    * `_center` centroid — the routing metric all deterministic-IVF
-    * steps share, rounded so both engines rank identically. */
-  private def detAff: Column = PortableRound.round4(cosine(col("_v"), col("_center")))
-
-  /** Cell assignment: argmax affinity per corpus vector (ties → lowest
-    * cell) — max over (affinity, -cell). The broadcast cross product
-    * partial-aggregates map-side, so only corpus-sized data shuffles. */
-  private def detAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centers: DataFrame): DataFrame =
-    corpus
-      .select(col(idCol).as("_id"), asDouble(col(vecCol)).as("_v"))
-      .crossJoin(broadcast(centers))
-      .select(col("_id"), col("_v"), col("_cell"), detAff.as("_aff"))
-      .groupBy(col("_id"))
-      .agg(max_by(struct(col("_cell"), col("_v")),
-        struct(col("_aff"), -col("_cell"))).as("_m"))
-      .select(col("_id"), col("_m._cell").as("_cell"), col("_m._v").as("_v"))
-
-  /** Per-query probe list: the `nProbe` best cells by affinity (ties →
-    * lowest cell), carrying the query vector along. */
-  private def detProbes(queries: DataFrame, qIdCol: String, qVecCol: String,
-      centers: DataFrame, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_v"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_aff", detAff)
-      .withColumn("_pr", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("_aff").desc, col("_cell").asc)))
-      .filter(col("_pr") <= nProbe)
-      .select(col("query_id"), col("_v").as("_qvec"), col("_cell"))
-  }
-
-  /** Persist a DETERMINISTIC-quantizer IVF index: cell assignment as in
-    * [[ivfTopKDeterministic]], corpus written PARTITIONED BY CELL
-    * (`cell=<i>/` hive directories under `dir/data`), centroids under
-    * `dir/centers`. The closed-form twin of [[writeIvfIndex]]: identical
-    * stored layout, but every step is SQL-expressible, so a probe of the
-    * stored index hash-checks against DuckDB (q84) instead of only a
-    * recall test. */
-  def writeIvfIndexDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCentroids: Int): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val centers = detCenters(corpus, idCol, vecCol, nCentroids)
-      detAssign(corpus, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      centers.select(col("_cell").as("cell"), col("_center").as("center"))
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      writeMaxIdMeta(corpus.sparkSession, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
-    }
-  }
-
-  /** Collect a probes frame ((query_id, _qvec, _cell) rows) ONCE and
-    * rebuild it as a small local DataFrame: the collected rows drive
-    * BOTH the isin partition filter and the broadcast join, so a
-    * non-deterministic queries frame (sample, unordered limit) cannot
-    * probe a cell missing from its own pruning list — and the probe
-    * lineage runs once, not twice. */
-  private def materializeProbes(spark: org.apache.spark.sql.SparkSession,
-      probes: DataFrame): (DataFrame, Seq[Int]) = {
-    val schema = probes.schema
-    val rows = probes.collect()
-    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val cellIdx = schema.fieldIndex("_cell")
-    (local, rows.map(_.getInt(cellIdx)).distinct.toSeq)
-  }
-
-  /** Probe a deterministic IVF index written by
-    * [[writeIvfIndexDeterministic]]: per-query probe cells come from the
-    * stored centroids (same affinity ranking as the in-memory variant),
-    * and the data scan filters on the PARTITION column, so only the
-    * probed `cell=` directories are read — at 100 TB a probe costs
-    * nProbe/nCentroids of the corpus in I/O (`PartitionFilters`
-    * asserted in PlanContractsSpec). Semantics identical to
-    * [[ivfTopKDeterministic]] over the same corpus. */
-  def probeIvfIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
-      dir: String, idCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
-    // The probed cell set is tiny (≤ |queries| × nProbe); materializing
-    // it as literals is what turns the probe into directory-level
-    // partition pruning on the data scan — the stored-index payoff.
-    val (probes, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, centers, nProbe))
-    val hitRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
-      .select(col("query_id"), col(idCol),
-        PortableRound.round4(cosine(col("v"), col("_qvec"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(hitRank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
-
-  /** Persist an IVF index: train the coarse quantizer, assign cells,
-    * and write the corpus PARTITIONED BY CELL — `cell=<i>/` hive
-    * directories under `dir/data`, centroids under `dir/centers`. At
-    * 100 TB this is the stored-index layout [[ivfTopK]] describes: a
-    * probe becomes directory-level partition pruning plus a scan of
-    * nProbe/nCentroids of the corpus. Deterministic for a fixed seed. */
-  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCentroids: Int, seed: Long = 42L,
-      quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
-      val train = Sampling.deterministic(featured, idCol, trainFraction)
-        .select("_feat").persist()
-      val model = new KMeans()
-        .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
-        .setInitMode("random")
-        .setFeaturesCol("_feat").setPredictionCol("cell")
-        .fit(train)
-      train.unpersist(blocking = false)
-      model.transform(featured).drop("_feat")
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      model.clusterCenters.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
-    }
-  }
-
-  /** Probe a persisted IVF index: nearest `nProbe` cells per query are
-    * computed from the (tiny) stored centroids on the driver, and the
-    * data scan filters on the PARTITION column — only the probed cell
-    * directories are read (`PartitionFilters`, asserted in
-    * SimilaritySpec). nProbe = nCentroids degenerates to exact
-    * brute force over the whole index. */
-  def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      idCol: String, vecCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
-    val centers = spark.read.parquet(s"$dir/centers")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    // typed widening cast, NOT toString parsing: float→double must route
-    // queries exactly as the append path's cast did, and a null element
-    // must surface as a null, not a NumberFormatException
-    val qs = queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qv"))
-      .collect()
-      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
-    // PER-QUERY probe cells: each query joins only ITS OWN nProbe cells
-    // (a union-of-all-cells cross join would score every query
-    // near-brute-force in a batch and make results depend on what else
-    // was in the batch). The collected rows drive BOTH the partition
-    // filter and the join, so nothing is evaluated twice.
-    val probeRows = qs.flatMap { case (qid, qv) =>
-      centers.sortBy { case (_, c) =>
-        var d = 0.0; var i = 0
-        while (i < c.length) { val t = qv(i) - c(i); d += t * t; i += 1 }
-        d
-      }.take(nProbe).map { case (cell, _) => Row(qid, qv.toSeq, cell) }
-    }
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*),
-      StructType(Seq(
-        StructField("query_id", queries.schema(qIdCol).dataType),
-        StructField("_qvec", ArrayType(DoubleType)),
-        StructField("_cell", IntegerType))))
-    val probedCells = probeRows.map(_.getInt(2)).distinct.toSeq
-    val hitRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
-      .select(col("query_id"), col(idCol),
-        PortableRound.round4(cosine(col(vecCol), col("_qvec"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(hitRank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
-
   /** IVF/LSH-bucketed ANN: probe only the query's sign bucket. Recall is
     * partial (that's the ANN trade) but cost is corpus/2^nBits per
     * query. */
@@ -556,7 +253,7 @@ object Similarity {
 
   // ----------------------------------------------------------------
   // Product quantization (PQ): the memory face of the ANN scale story.
-  // IVF (above) prunes WHICH vectors a probe reads; PQ shrinks WHAT is
+  // IVF (below) prunes WHICH vectors a probe reads; PQ shrinks WHAT is
   // stored per vector — m sub-quantizer codes (one small int each)
   // instead of dim floats, a ~(4*dim)/m compression. At 100 TB the
   // codes column is what an executor can actually hold per partition,
@@ -679,14 +376,6 @@ object Similarity {
     df.withColumn(codesCol, codes)
   }
 
-  /** ADC top-k over a PQ-encoded corpus: per query, the m×k lookup
-    * table of exact subvector→centroid squared distances is built in
-    * one narrow pass over the (tiny) query frame, broadcast, and every
-    * corpus row is scored with m table lookups over its codes — the
-    * stored vectors are never touched. Returns `(query_id, idCol,
-    * d2_approx)`, `topK` rows per query, ranked ascending (PQ is an L2
-    * structure; ties → lowest id). Recall is approximate by
-    * construction — the quantization error bounds it, not the search. */
   /** ADC score of a codes column against a per-query `_tab` lookup
     * column (flat m*k array, entry j*k+c). Rounded mode: `_tab` holds
     * 4-dp-scaled longs, so the sum is an exact integer sum. */
@@ -696,20 +385,6 @@ object Similarity {
       col(codesCol), col("_tab"), m, k, rounded)
     if (rounded) s.cast("double") / 10000.0
     else PortableRound.round4(s)
-  }
-
-  /** The interpreted composition [[adcScore]] replaced (a zip_with
-    * lookup array + aggregate fold per corpus row × query) — the
-    * parity reference SimilaritySpec pins [[graft.functions.AdcLookupSum]]
-    * against. */
-  private[graft] def adcScoreComposed(codesCol: String, m: Int, k: Int,
-      rounded: Boolean): Column = {
-    val lookups = zip_with(col(codesCol), sequence(lit(0), lit(m - 1)),
-      (c, j) => element_at(col("_tab"), (j * lit(k) + c + 1).cast("int")))
-    if (rounded)
-      aggregate(lookups, lit(0L), (acc, d) => acc + d).cast("double") / 10000.0
-    else
-      PortableRound.round4(aggregate(lookups, lit(0.0), (acc, d) => acc + d))
   }
 
   /** The flat m*k ADC lookup table for a query vector column: entry
@@ -724,20 +399,23 @@ object Similarity {
           element_at(element_at(cents, j + 1), c + 1)))))
   }
 
+  /** ADC top-k over a PQ-encoded corpus: per query, the m×k lookup
+    * table of exact subvector→centroid squared distances is built in
+    * one narrow pass over the (tiny) query frame, broadcast, and every
+    * corpus row is scored with m table lookups over its codes — the
+    * stored vectors are never touched. Returns `(query_id, idCol,
+    * d2_approx)`, `topK` rows per query, ranked ascending (PQ is an L2
+    * structure; ties → lowest id). Recall is approximate by
+    * construction — the quantization error bounds it, not the search. */
   def pqTopK(encoded: DataFrame, idCol: String, codesCol: String,
       model: PqModel, queries: DataFrame, qIdCol: String, qVecCol: String,
       topK: Int, rounded: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tables = queries.select(col(qIdCol).as("query_id"),
       adcTable(asDouble(col(qVecCol)), model, rounded).as("_tab"))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2_approx").asc, col(idCol).asc)
-    encoded.crossJoin(broadcast(tables))
+    topKPerQuery(encoded.crossJoin(broadcast(tables))
       .select(col("query_id"), col(idCol),
-        adcScore(codesCol, model.m, model.k, rounded).as("d2_approx"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= topK)
-      .drop("_r")
+        adcScore(codesCol, model.m, model.k, rounded).as("d2_approx")),
+      topK, col("d2_approx").asc, col(idCol).asc)
   }
 
   /** Exact-cosine RE-RANK of an ANN shortlist — the standard two-stage
@@ -752,20 +430,14 @@ object Similarity {
     * re-ranked descending, `k` rows per query, ties → lowest id. */
   def rerankExact(shortlist: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    corpus.select(col(idCol), asDouble(col(vecCol)).as("_cv"))
+      k: Int): DataFrame =
+    topKPerQuery(corpus.select(col(idCol), asDouble(col(vecCol)).as("_cv"))
       .join(broadcast(shortlist.select(col("query_id"), col(idCol))), Seq(idCol))
       .join(broadcast(queries.select(col(qIdCol).as("query_id"),
         asDouble(col(qVecCol)).as("_qv"))), Seq("query_id"))
       .select(col("query_id"), col(idCol),
-        PortableRound.round4(cosine(col("_cv"), col("_qv"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
+        PortableRound.round4(cosine(col("_cv"), col("_qv"))).as("cos_sim")),
+      k, col("cos_sim").desc, col(idCol).asc)
 
   /** HYBRID retrieval rerank — the lexical-then-semantic stack RAG and
     * training-retrieval pipelines run: a QUERY-INDEPENDENT scored
@@ -784,19 +456,14 @@ object Similarity {
       corpus: DataFrame, cIdCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1, got $k")
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-    corpus.select(col(cIdCol).as(idCol), asDouble(col(vecCol)).as("_cv"))
+    topKPerQuery(corpus.select(col(cIdCol).as(idCol), asDouble(col(vecCol)).as("_cv"))
       .join(broadcast(shortlist.select(col(idCol), col(scoreCol))), Seq(idCol))
       .crossJoin(broadcast(queries.select(col(qIdCol).as("query_id"),
         asDouble(col(qVecCol)).as("_qv"))))
       .select(col("query_id"), col(idCol), col(scoreCol),
-        PortableRound.round4(cosine(col("_cv"), col("_qv"))).as("cos_sim"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= k)
-      .drop("_r")
+        PortableRound.round4(cosine(col("_cv"), col("_qv"))).as("cos_sim")),
+      k, col("cos_sim").desc, col(idCol).asc)
   }
 
   /** Reciprocal-rank FUSION of the hybrid pair — the ranking production
@@ -817,7 +484,6 @@ object Similarity {
       corpus: DataFrame, cIdCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, c: Int = 60): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1, got $k")
     require(c >= 1, s"RRF constant must be >= 1, got $c")
     val scored = corpus.select(col(cIdCol).as(idCol), asDouble(col(vecCol)).as("_cv"))
@@ -839,138 +505,345 @@ object Similarity {
       .withColumn("rrf_micro",
         (floor(lit(1000000.0) / (lit(c) + col("r_lex"))) +
           floor(lit(1000000.0) / (lit(c) + col("r_sem")))).cast("long"))
-    val wF = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_micro").desc, col(idCol).asc)
-    fused.withColumn("_r", row_number().over(wF))
-      .filter(col("_r") <= k)
-      .drop("_r")
+    topKPerQuery(fused, k, col("rrf_micro").desc, col(idCol).asc)
   }
 
   // ----------------------------------------------------------------
-  // IVFADC: the COMPOSED stored index — IVF prunes which partitions a
-  // probe reads, PQ shrinks what each row stores. Data files hold
-  // (id, codes) only, partitioned by cell: no float vectors anywhere
-  // in the search path. At 100 TB a probe costs
-  // nProbe/nCentroids × (m small ints per row) of I/O — both halves
-  // of the ANN scale story at once.
+  // Inverted-file (IVF) ANN. A k-means-style coarse quantizer cuts the
+  // corpus into cells; each query probes only its `nProbe` best cells
+  // (recall rises with nProbe; nProbe = nCentroids is brute force). At
+  // 100 TB the cell id is the partition column of the stored index, so
+  // a probe is partition pruning plus a scan of nProbe/nCentroids of
+  // the corpus.
+  //
+  // Every family runs ONE path — assign rows to cells, write them
+  // partitioned by cell, route each query to its nProbe best cells,
+  // score only those cells, keep each query's top k — and only the
+  // quantizer varies:
+  //
+  //   family (oracled query)   centres                    route     cell rows       score, order
+  //   deterministic (q43 q84   nCentroids lowest-id       affinity  (id, v)         cos_sim desc
+  //     q133)                  vectors
+  //   trained (q137, recall)   MLlib k-means              l2        corpus row      cos_sim desc
+  //   deterministic PQ (q88)   lowest-id vectors +        affinity  (id, codes)     d2_approx asc
+  //                            pqModelDeterministic                                 (exact 4-dp)
+  //   trained PQ (recall)      MLlib k-means + pqTrain    l2        (id, codes)     d2_approx asc
+  //   exact micro (q150 q151   integer Lloyd k-means      micro d2  (id, micro v)   d2 asc
+  //     q152 q163)
+  //
+  // Ties go to the lowest cell when routing and to the lowest id when
+  // ranking, on every family. Stored layout: `dir/data` the cell rows
+  // PARTITIONED BY cell (`cell=<i>/` hive directories), `dir/centers`
+  // (cell, center), the PQ families also `dir/codebook` (j, code,
+  // center), and `dir/meta` the max-id watermark ([[StoredIndex]]).
+  // The deterministic and micro families are SQL-expressible end to
+  // end, so their queries hash-check against DuckDB; the MLlib families
+  // are recall-tracked by Bench.
   // ----------------------------------------------------------------
 
-  /** Persist the composed deterministic IVF+PQ index: coarse routing
-    * cells from [[detCenters]] (cosine affinity, like q43/q84), PQ
-    * codes from [[pqModelDeterministic]] (rounded, like q87). Layout:
-    * `dir/data` = (idCol, codes) PARTITIONED BY cell — the vectors are
-    * dropped, codes are the entire stored payload; `dir/centers` = the
-    * coarse routing centroids; `dir/codebook` = (j, code, center) PQ
-    * centroid rows. Fully closed-form, so the complete
-    * write→probe round trip is oracle-checkable (q88). */
-  def writeIvfPqIndexDeterministic(corpus: DataFrame, idCol: String,
-      vecCol: String, dir: String, nCentroids: Int, m: Int, k: Int): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
+  /** A coarse routing metric over (vector, centre) double arrays:
+    * `key` scores one pair, and `higherIsNearer` is its only other
+    * degree of freedom. Ties go to the lowest cell either way, so
+    * assignment ([[assignCells]]) and probing ([[probeCells]]) route
+    * identically by construction. */
+  private final case class Metric(key: (Column, Column) => Column, higherIsNearer: Boolean) {
+    /** Probe order over `_key`/`_cell` rows: nearest first. */
+    def order: Seq[Column] =
+      Seq(if (higherIsNearer) col("_key").desc else col("_key").asc, col("_cell").asc)
+    /** Aggregate picking `payload` of the nearest `_key`/`_cell` row. */
+    def nearest(payload: Column): Column =
+      if (higherIsNearer) max_by(payload, struct(col("_key"), -col("_cell")))
+      else min_by(payload, struct(col("_key"), col("_cell")))
+  }
+
+  /** Spherical IVF routing, the standard layout for a cosine metric:
+    * rounded cosine affinity, so both engines rank identically. */
+  private val affinity = Metric((v, c) => PortableRound.round4(cosine(v, c)), higherIsNearer = true)
+
+  /** k-means' own assignment metric: squared L2. */
+  private val l2 = Metric(l2sq, higherIsNearer = false)
+
+  private def routing(centers: DataFrame): DataFrame =
+    centers.select(col("cell").as("_cell"), col("center").as("_center"))
+
+  /** Route every row of `rows` (its vector a double array `_v`) to the
+    * nearest of `centers` (cell, center): `payload` plus `cell`, one row
+    * per `groupCol` value. The centroids-sized frame broadcasts into a
+    * cross product that partial-aggregates map-side, so only
+    * corpus-sized data ever shuffles. */
+  private def assignCells(rows: DataFrame, groupCol: String, payload: Seq[Column],
+      centers: DataFrame, metric: Metric): DataFrame =
+    rows.crossJoin(broadcast(routing(centers)))
+      .withColumn("_key", metric.key(col("_v"), col("_center")))
+      .groupBy(col(groupCol))
+      .agg(metric.nearest(struct(payload :+ col("_cell").as("cell"): _*)).as("_m"))
+      .select(col("_m.*"))
+
+  /** [[assignCells]] of plain vectors: (idCol, v, cell) rows, `v` the
+    * vector as doubles. */
+  private def vecCells(rows: DataFrame, idCol: String, vecCol: String,
+      centers: DataFrame, metric: Metric): DataFrame =
+    assignCells(rows.select(col(idCol), asDouble(col(vecCol)).as("_v")), idCol,
+      Seq(col(idCol), col("_v").as("v")), centers, metric)
+
+  /** PQ cell rows: (idCol, codes, cell) — the vectors are dropped, codes
+    * are the entire stored payload. */
+  private def pqCells(rows: DataFrame, idCol: String, vecCol: String,
+      model: PqModel, rounded: Boolean): DataFrame =
+    pqEncode(rows, vecCol, model, rounded = rounded).select(col(idCol), col("codes"), col("cell"))
+
+  /** Per-query probe list: (query_id, `_qvec` the query as doubles,
+    * `_cell`) for each query's `nProbe` nearest cells. Queries ×
+    * centroids rows — tiny, broadcast by every consumer. */
+  private def probeCells(queries: DataFrame, qIdCol: String, qVecCol: String,
+      centers: DataFrame, metric: Metric, nProbe: Int): DataFrame =
+    topKPerQuery(queries.select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qvec"))
+        .crossJoin(broadcast(routing(centers)))
+        .withColumn("_key", metric.key(col("_qvec"), col("_center"))),
+      nProbe, metric.order: _*)
+      .select(col("query_id"), col("_qvec"), col("_cell"))
+
+  /** The probe's scoring half: cell rows ⋈ broadcast (query, cell)
+    * probes — each query meets only ITS OWN cells, so results never
+    * depend on what else is in the batch — `score`d, top `k` per query
+    * by `order`, ties → lowest id. The in-memory top-k functions run it
+    * over freshly assigned rows, the stored probes over the pruned scan. */
+  private def scoreCells(cells: DataFrame, probes: DataFrame, idCol: String,
+      k: Int, score: Column, order: Column): DataFrame =
+    topKPerQuery(cells.join(broadcast(probes), col("cell") === col("_cell"))
+      .select(col("query_id"), col(idCol), score), k, order, col(idCol).asc)
+
+  private def cosSim(vec: Column): Column =
+    PortableRound.round4(cosine(vec, col("_qvec"))).as("cos_sim")
+
+  /** Collect a small frame ONCE and rebuild it as a local DataFrame: its
+    * lineage runs once, and every later use sees the same rows. */
+  private def localCopy(df: DataFrame): (DataFrame, Array[Row]) = {
+    val rows = df.collect()
+    (df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), rows)
+  }
+
+  /** Write cell rows under `dir/data`, partitioned by cell. Rows are
+    * clustered by cell first: without it every task opens a file per
+    * cell it sees (tasks × cells small files — the classic
+    * partitioned-write fanout). */
+  private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
+    rows.repartition(col("cell")).write.mode(mode).partitionBy("cell").parquet(s"$dir/data")
+
+  /** Build and persist a stored index under the single-writer lock (a
+    * rebuild racing a locked append would overwrite data the append's
+    * meta watermark already claims is indexed). `build` returns the cell
+    * rows, the centres (cell, center) and, for PQ, the codebook. */
+  private def writeStored(corpus: DataFrame, idCol: String, dir: String)(
+      build: => (DataFrame, DataFrame, Option[PqModel])): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    StoredIndex.withAppendLock(spark, dir) {
+      val (rows, centers, codebook) = build
+      writeCells(rows, dir, "overwrite")
+      centers.write.mode("overwrite").parquet(s"$dir/centers")
+      codebook.foreach { pq =>
+        (for { j <- 0 until pq.m; c <- 0 until pq.k } yield (j, c, pq.centroids(j)(c).toSeq))
+          .toDF("j", "code", "center").write.mode("overwrite").parquet(s"$dir/codebook")
+      }
+      StoredIndex.writeMaxIdMeta(spark, dir, StoredIndex.requiredMaxId(corpus, idCol))
+    }
+  }
+
+  /** Incremental ingest into a stored index through its FROZEN
+    * quantizer: the batch routes through the stored centres (and
+    * encodes against the stored codebook) — no retraining, no rebuild,
+    * the standard inverted-file maintenance move — and appends into the
+    * existing `cell=` directories; dynamic partition append leaves
+    * existing files untouched. The stored geometry is read EAGERLY in
+    * the prepare phase of [[StoredIndex.guardedAppendPrepared]]: the
+    * centres are localCheckpointed (read.parquet alone only validates
+    * footers and would defer page reads into the write) and `prepare`
+    * adds the rest, so a missing or corrupt artifact fails before the
+    * meta goes pending. The batch's ids must all exceed the indexed
+    * corpus's — validated against the stored max-id meta, so a violating
+    * or duplicate-id batch fails fast instead of corrupting probes. */
+  private def appendFrozen[A](spark: SparkSession, dir: String, batch: DataFrame,
+      idCol: String)(prepare: DataFrame => A)(rows: A => DataFrame): Unit =
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol)(
+      prepare(spark.read.parquet(s"$dir/centers").localCheckpoint()))(
+      a => writeCells(rows(a), dir, "append"))
+
+  /** The partition-pruned stored probe. The probe list is collected
+    * once and drives BOTH the `cell IN (…)` filter on the data scan —
+    * directory-level pruning, so a probe costs nProbe/nCentroids of the
+    * corpus in I/O (`PartitionFilters`, asserted in PlanContractsSpec) —
+    * and the broadcast join, so a non-deterministic queries frame
+    * (sample, unordered limit) cannot probe a cell missing from its own
+    * pruning list. `tables` extends the local probes before the join
+    * (the PQ families' ADC lookup tables). */
+  private def probeStored(spark: SparkSession, dir: String, idCol: String,
+      probes: DataFrame, k: Int, score: Column, order: Column,
+      tables: DataFrame => DataFrame = identity): DataFrame = {
+    val (local, rows) = localCopy(probes)
+    val cellIdx = probes.schema.fieldIndex("_cell")
+    val cells = rows.map(_.getInt(cellIdx)).distinct.toSeq
+    scoreCells(spark.read.parquet(s"$dir/data").filter(col("cell").isin(cells: _*)),
+      tables(local), idCol, k, score, order)
+  }
+
+  // ---- deterministic family (q43, q84, q133) ----
+
+  /** Deterministic coarse-quantizer centres (cell, center): the
+    * `nCentroids` lowest-id corpus vectors, numbered 0..n-1 by id order.
+    * Tiny frame — always broadcast. */
+  private def detCenters(corpus: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int): DataFrame =
+    corpus
+      .orderBy(col(idCol)).limit(nCentroids)
+      .select(col(idCol).as("_cid"), asDouble(col(vecCol)).as("center"))
+      .withColumn("cell", row_number().over(Window.orderBy(col("_cid"))) - 1)
+      .select("cell", "center")
+
+  /** IVF ANN with a DETERMINISTIC coarse quantizer: centroids are the
+    * `nCentroids` lowest-id corpus vectors, and routing is by (rounded)
+    * cosine affinity. Same probe semantics as [[ivfTopK]] (assign every
+    * corpus vector to its best cell, probe the query's `nProbe` best
+    * cells, exact top-k within the probed cells), but every step is
+    * closed-form — no iterative training — so the whole query is
+    * SQL-expressible and oracle-checkable. [[ivfTopK]] (trained
+    * quantizer) stays the production variant; this one pins down the
+    * probe/rank semantics. */
+  def ivfTopKDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String,
+      k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
+    val centers = detCenters(corpus, idCol, vecCol, nCentroids)
+    scoreCells(vecCells(corpus, idCol, vecCol, centers, affinity),
+      probeCells(queries, qIdCol, qVecCol, centers, affinity, nProbe),
+      idCol, k, cosSim(col("v")), col("cos_sim").desc)
+  }
+
+  /** Persist a DETERMINISTIC-quantizer IVF index: cell assignment as in
+    * [[ivfTopKDeterministic]], (idCol, v) rows partitioned by cell. The
+    * closed-form twin of [[writeIvfIndex]]: every step is
+    * SQL-expressible, so a probe of the stored index hash-checks against
+    * DuckDB (q84) instead of only a recall test. */
+  def writeIvfIndexDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
+      dir: String, nCentroids: Int): Unit =
+    writeStored(corpus, idCol, dir) {
       val centers = detCenters(corpus, idCol, vecCol, nCentroids)
-      val model = pqModelDeterministic(corpus, idCol, vecCol, m, k)
-      val assigned = detAssign(corpus, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
-      pqEncode(assigned, "_vec", model, rounded = true)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      centers.select(col("_cell").as("cell"), col("_center").as("center"))
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      val cb = for { j <- 0 until m; c <- 0 until k }
-        yield (j, c, model.centroids(j)(c).toSeq)
-      cb.toDF("j", "code", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+      (vecCells(corpus, idCol, vecCol, centers, affinity), centers, None)
     }
+
+  /** Incremental ingest into a stored deterministic IVF index through
+    * its frozen centres ([[appendFrozen]]). Under the append-only id
+    * discipline the result is bit-identical to having indexed the union
+    * up front (asserted in SimilaritySpec; q133). */
+  def appendToIvfIndexDeterministic(spark: SparkSession,
+      dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
+    appendFrozen(spark, dir, batch, idCol)(identity)(
+      vecCells(batch, idCol, vecCol, _, affinity))
+
+  /** Probe a deterministic IVF index written by
+    * [[writeIvfIndexDeterministic]]: per-query probe cells come from the
+    * stored centroids, and the data scan reads only the probed `cell=`
+    * directories ([[probeStored]]). Semantics identical to
+    * [[ivfTopKDeterministic]] over the same corpus. */
+  def probeIvfIndexDeterministic(spark: SparkSession,
+      dir: String, idCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String,
+      k: Int, nProbe: Int): DataFrame =
+    probeStored(spark, dir, idCol,
+      probeCells(queries, qIdCol, qVecCol, spark.read.parquet(s"$dir/centers"), affinity, nProbe),
+      k, cosSim(col("v")), col("cos_sim").desc)
+
+  // ---- trained family (q137; Bench trained_recall) ----
+
+  /** Train the MLlib coarse quantizer and assign the corpus with it:
+    * (centres (cell, center), corpus rows + `cell`). A COARSE quantizer
+    * doesn't need convergence or the full corpus — cell quality for
+    * ROUTING saturates with a few Lloyd rounds over a sample (classic
+    * IVF practice). So: deterministic hash-sample of the corpus, cached
+    * so each Lloyd round doesn't re-scan the source, random init (the
+    * k-means|| parallel init spends extra full passes picking
+    * marginally better seeds — routing is insensitive to that).
+    * Assignment is the model's own `transform`. Deterministic for a
+    * fixed seed. */
+  private def trainCoarse(corpus: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int, seed: Long, quantizerIter: Int,
+      trainFraction: Double): (DataFrame, DataFrame) = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
+    val train = Sampling.deterministic(featured, idCol, trainFraction)
+      .select("_feat").persist()
+    val model = new KMeans()
+      .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
+      .setInitMode("random")
+      .setFeaturesCol("_feat").setPredictionCol("cell")
+      .fit(train)
+    train.unpersist(blocking = false) // fit is eager; sample no longer needed
+    (model.clusterCenters.zipWithIndex.toSeq
+        .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center"),
+      model.transform(featured).drop("_feat"))
   }
 
-  // Max-id meta + append-only id-discipline validation are shared
-  // across all stored index families — see [[StoredIndex]].
-  private def writeMaxIdMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxId: Long): Unit =
-    StoredIndex.writeMaxIdMeta(spark, dir, maxId)
+  /** IVF ANN with a TRAINED coarse quantizer (vs [[signBucket]]'s
+    * data-oblivious hashing): k-means centroids ([[trainCoarse]])
+    * partition the corpus into `nCentroids` cells; each query probes its
+    * `nProbe` nearest cells by L2. The query→cell probe list is tiny
+    * (queries × centroids) and broadcast. Deterministic for a fixed
+    * seed. */
+  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String,
+      k: Int, nCentroids: Int, nProbe: Int, seed: Long = 42L,
+      quantizerIter: Int = 5, trainFraction: Double = 0.25): DataFrame = {
+    val (centers, indexed) = trainCoarse(corpus, idCol, vecCol, nCentroids, seed,
+      quantizerIter, trainFraction)
+    scoreCells(indexed, probeCells(queries, qIdCol, qVecCol, centers, l2, nProbe),
+      idCol, k, cosSim(col(vecCol)), col("cos_sim").desc)
+  }
 
-  /** [[StoredIndex.guardedAppend]] with the fail-fast prepare phase:
-    * stored-geometry reads (centers, codebooks) run before the meta is
-    * marked pending, so a missing/corrupt stored artifact cannot strand
-    * the index in pending. */
-  private def guardedAppendPrepared[A](spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, idCol: String)(prepare: => A)(
-      write: A => Unit): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol)(prepare)(write)
-
-  /** Incremental ingest into a stored deterministic IVF index: assign a
-    * NEW batch of vectors to cells through the STORED coarse centroids
-    * (no retraining, no rebuild — the routing function is frozen at
-    * write time, the standard inverted-file maintenance move) and
-    * append the rows into the existing `cell=` partition directories.
-    * At 100 TB this is how the index keeps up with ingest: the append
-    * touches only the new batch, dynamic partition append leaves
-    * existing files untouched, and probes see old + new rows with
-    * unchanged semantics. The batch's ids must all be larger than the
-    * indexed corpus's (the append-only id discipline, which makes the
-    * result bit-identical to having indexed the union up front —
-    * asserted in SimilaritySpec); the precondition is VALIDATED against
-    * the stored max-id meta, so a violating or duplicate-id batch fails
-    * fast instead of silently corrupting probe results. */
-  def appendToIvfIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // localCheckpoint is EAGER: the centroids-sized frame is fully
-      // read here, so a corrupt (not just missing) stored artifact
-      // fails before the meta goes pending — read.parquet alone only
-      // validates footers and would defer page reads into the write
-      spark.read.parquet(s"$dir/centers")
-        .select(col("cell").as("_cell"), col("center").as("_center"))
-        .localCheckpoint()
-    } { centers =>
-      detAssign(batch, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+  /** Persist a trained IVF index: [[trainCoarse]]'s cells, the WHOLE
+    * corpus rows partitioned by cell. Deterministic for a fixed seed. */
+  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      dir: String, nCentroids: Int, seed: Long = 42L,
+      quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit =
+    writeStored(corpus, idCol, dir) {
+      val (centers, indexed) = trainCoarse(corpus, idCol, vecCol, nCentroids, seed,
+        quantizerIter, trainFraction)
+      (indexed, centers, None)
     }
+
+  /** Probe a persisted trained IVF index: nearest `nProbe` cells per
+    * query by L2 against the stored centroids, partition-pruned scan
+    * ([[probeStored]]). nProbe = nCentroids degenerates to exact brute
+    * force over the whole index. */
+  def probeIvfIndex(spark: SparkSession, dir: String,
+      idCol: String, vecCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String,
+      k: Int, nProbe: Int): DataFrame =
+    probeStored(spark, dir, idCol,
+      probeCells(queries, qIdCol, qVecCol, spark.read.parquet(s"$dir/centers"), l2, nProbe),
+      k, cosSim(col(vecCol)), col("cos_sim").desc)
 
   /** TRAINED twin of [[appendToIvfIndexDeterministic]]: the new batch
     * routes through the STORED k-means centroids by squared L2 —
     * k-means' own assignment metric, ties → lowest cell — so appended
-    * rows land exactly where a fresh `KMeansModel.transform` would put
-    * them; the frozen model needs no retraining. Same id-discipline
-    * validation. The appended rows carry the batch's full column set
-    * (the trained writer stores whole corpus rows, not id+vector
-    * projections). */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
+    * rows land where a fresh `KMeansModel.transform` would put them (up
+    * to floating-point near-ties). The appended rows carry the batch's full
+    * column set (the trained writer stores whole corpus rows). */
+  def appendToIvfIndex(spark: SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // localCheckpoint is EAGER: the centroids-sized frame is fully
-      // read here, so a corrupt (not just missing) stored artifact
-      // fails before the meta goes pending — read.parquet alone only
-      // validates footers and would defer page reads into the write
-      spark.read.parquet(s"$dir/centers")
-        .select(col("cell").as("_cell"), col("center").as("_center"))
-        .localCheckpoint()
-    } { centers =>
-      val carried = batch.columns.map(col) :+ col("_cell").as("cell")
-      batch.withColumn("_v", asDouble(col(vecCol)))
-        .crossJoin(broadcast(centers))
-        .withColumn("_d2", l2sq(col("_v"), col("_center")))
-        .groupBy(col(idCol))
-        .agg(min_by(struct(carried: _*), struct(col("_d2"), col("_cell"))).as("_m"))
-        .select(col("_m.*"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
-    }
+    appendFrozen(spark, dir, batch, idCol)(identity)(centers =>
+      assignCells(batch.withColumn("_v", asDouble(col(vecCol))), idCol,
+        batch.columns.toSeq.map(col), centers, l2))
+
+  // ---- IVFADC: IVF prunes which partitions a probe reads, PQ shrinks
+  // what each row stores. Data files hold (id, codes) only: no float
+  // vectors anywhere in the search path, so at 100 TB a probe costs
+  // nProbe/nCentroids × (m small ints per row) of I/O. ----
 
   /** Load a stored PQ codebook back into a [[PqModel]] — m*k rows, a
     * bounded driver pull (the stored-centroid class). */
-  private def loadPqCodebook(spark: org.apache.spark.sql.SparkSession,
-      dir: String): PqModel = {
+  private def loadPqCodebook(spark: SparkSession, dir: String): PqModel = {
     val cbRows = spark.read.parquet(s"$dir/codebook")
       .select(col("j"), col("code"), col("center").cast("array<double>"))
       .collect()
@@ -982,180 +855,91 @@ object Similarity {
       Array.tabulate(m)(j => byJ(j).sortBy(_._2).map(_._3)))
   }
 
-  /** TRAINED twin of [[writeIvfPqIndexDeterministic]]: k-means coarse
-    * cells ([[writeIvfIndex]]'s quantizer) + per-subspace k-means PQ
-    * codebooks ([[pqTrain]]) — the production IVFADC writer. Same
-    * layout: codes-only data partitioned by cell, stored centers and
-    * codebook. Deterministic for a fixed seed; recall-tested in
-    * SimilaritySpec (not SQL-expressible — the deterministic twin is
-    * the oracled one, q88). */
-  def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dir: String, nCentroids: Int, m: Int, k: Int, seed: Long = 42L,
-      quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
-      val train = Sampling.deterministic(featured, idCol, trainFraction)
-        .select("_feat").persist()
-      val coarse = new KMeans()
-        .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
-        .setInitMode("random")
-        .setFeaturesCol("_feat").setPredictionCol("cell")
-        .fit(train)
-      train.unpersist(blocking = false)
-      val pq = pqTrain(corpus, idCol, vecCol, m, k, seed, quantizerIter,
-        trainFraction)
-      pqEncode(coarse.transform(featured).drop("_feat"), vecCol, pq)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      coarse.clusterCenters.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      val cb = for { j <- 0 until m; c <- 0 until k }
-        yield (j, c, pq.centroids(j)(c).toSeq)
-      cb.toDF("j", "code", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
-    }
+  /** Stored IVFADC probe: route through the stored coarse centres, then
+    * ADC-score the pruned code rows against per-(query, cell) lookup
+    * tables rebuilt from the stored codebook — the scan reads only (id,
+    * codes, cell). Returns `(query_id, idCol, d2_approx)`, `topK`
+    * ascending per query, ties → lowest id. */
+  private def probePq(spark: SparkSession, dir: String, idCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String,
+      topK: Int, nProbe: Int, metric: Metric, rounded: Boolean): DataFrame = {
+    val pq = loadPqCodebook(spark, dir)
+    probeStored(spark, dir, idCol,
+      probeCells(queries, qIdCol, qVecCol, spark.read.parquet(s"$dir/centers"), metric, nProbe),
+      topK, adcScore("codes", pq.m, pq.k, rounded).as("d2_approx"), col("d2_approx").asc,
+      _.select(col("query_id"), col("_cell"), adcTable(col("_qvec"), pq, rounded).as("_tab")))
   }
 
-  /** Probe a TRAINED composed index: L2 routing to the `nProbe` nearest
-    * stored coarse centers (k-means' own metric, like [[probeIvfIndex]])
-    * — computed distributed against the broadcast centers frame — then
-    * the partition-pruned codes scan is ADC-scored per (query, cell).
-    * Returns `(query_id, idCol, d2_approx)` ascending, ties → lowest
-    * id. */
-  def probeIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+  /** Persist the composed deterministic IVF+PQ index: coarse routing
+    * cells from [[detCenters]] (cosine affinity, like q43/q84), PQ codes
+    * from [[pqModelDeterministic]] (rounded, like q87). Fully
+    * closed-form, so the complete write→probe round trip is
+    * oracle-checkable (q88). */
+  def writeIvfPqIndexDeterministic(corpus: DataFrame, idCol: String,
+      vecCol: String, dir: String, nCentroids: Int, m: Int, k: Int): Unit =
+    writeStored(corpus, idCol, dir) {
+      val centers = detCenters(corpus, idCol, vecCol, nCentroids)
+      val pq = pqModelDeterministic(corpus, idCol, vecCol, m, k)
+      (pqCells(vecCells(corpus, idCol, vecCol, centers, affinity), idCol, "v", pq, rounded = true),
+        centers, Some(pq))
+    }
+
+  /** Incremental ingest into a stored deterministic IVFADC index: route
+    * through the stored centres, encode against the stored codebook
+    * ([[appendFrozen]]). Under the append-only id discipline the result
+    * is bit-identical to indexing the union up front. */
+  def appendToIvfPqIndexDeterministic(spark: SparkSession,
+      dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
+    appendFrozen(spark, dir, batch, idCol)(c => (c, loadPqCodebook(spark, dir))) {
+      case (centers, pq) =>
+        pqCells(vecCells(batch, idCol, vecCol, centers, affinity), idCol, "v", pq, rounded = true)
+    }
+
+  /** Probe a composed deterministic IVF+PQ index ([[probePq]], affinity
+    * routing, exact 4-dp ADC): identical to in-memory [[pqTopK]]
+    * restricted to the probed cells. */
+  def probeIvfPqIndexDeterministic(spark: SparkSession,
       dir: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
-      topK: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val model = loadPqCodebook(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
-    val probeRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("_d2").asc, col("_cell").asc)
-    val probes = queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qvec"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_d2", l2sq(col("_qvec"), col("_center")))
-      .withColumn("_pr", row_number().over(probeRank))
-      .filter(col("_pr") <= nProbe)
-      .select(col("query_id"), col("_qvec"), col("_cell"))
-    val (probesLocal, probedCells) = materializeProbes(spark, probes)
-    val tables = probesLocal.select(col("query_id"), col("_cell"),
-      adcTable(col("_qvec"), model, rounded = false).as("_tab"))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2_approx").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(tables), col("cell") === col("_cell"))
-      .select(col("query_id"), col(idCol),
-        adcScore("codes", model.m, model.k, rounded = false).as("d2_approx"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= topK)
-      .drop("_r")
-  }
+      topK: Int, nProbe: Int): DataFrame =
+    probePq(spark, dir, idCol, queries, qIdCol, qVecCol, topK, nProbe, affinity, rounded = true)
 
-  /** Incremental ingest into a stored IVFADC index: the new batch
-    * routes through the STORED coarse centroids and encodes against the
-    * STORED codebook (both frozen at write time — the [[appendToIvfIndexDeterministic]]
-    * maintenance move, applied to codes), then appends into the
-    * existing `cell=` directories. Under the append-only id discipline
-    * (validated, like every append here) the result is bit-identical to
-    * indexing the union up front. */
-  def appendToIvfPqIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // codebook pull is already an eager collect; centers get the
-      // same eager treatment (see appendToIvfIndexDeterministic)
-      (loadPqCodebook(spark, dir),
-        spark.read.parquet(s"$dir/centers")
-          .select(col("cell").as("_cell"), col("center").as("_center"))
-          .localCheckpoint())
-    } { case (model, centers) =>
-      val assigned = detAssign(batch, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
-      pqEncode(assigned, "_vec", model, rounded = true)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+  /** TRAINED twin of [[writeIvfPqIndexDeterministic]]: k-means coarse
+    * cells ([[trainCoarse]]) + per-subspace k-means PQ codebooks
+    * ([[pqTrain]]) — the production IVFADC writer. Deterministic for a
+    * fixed seed; recall-tested in SimilaritySpec and Bench. */
+  def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      dir: String, nCentroids: Int, m: Int, k: Int, seed: Long = 42L,
+      quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit =
+    writeStored(corpus, idCol, dir) {
+      val (centers, indexed) = trainCoarse(corpus, idCol, vecCol, nCentroids, seed,
+        quantizerIter, trainFraction)
+      val pq = pqTrain(corpus, idCol, vecCol, m, k, seed, quantizerIter, trainFraction)
+      (pqCells(indexed, idCol, vecCol, pq, rounded = false), centers, Some(pq))
     }
 
   /** TRAINED twin of [[appendToIvfPqIndexDeterministic]]: squared-L2
-    * routing through the stored k-means coarse centroids
-    * ([[appendToIvfIndex]]'s move) + encoding against the stored
-    * trained codebook — the frozen-model maintenance path for the
-    * production IVFADC index. Same id-discipline validation. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
+    * routing through the stored k-means centres + encoding against the
+    * stored trained codebook. */
+  def appendToIvfPqIndex(spark: SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // codebook pull is already an eager collect; centers get the
-      // same eager treatment (see appendToIvfIndexDeterministic)
-      (loadPqCodebook(spark, dir),
-        spark.read.parquet(s"$dir/centers")
-          .select(col("cell").as("_cell"), col("center").as("_center"))
-          .localCheckpoint())
-    } { case (model, centers) =>
-      val assigned = batch
-        .select(col(idCol), asDouble(col(vecCol)).as("_vec"))
-        .crossJoin(broadcast(centers))
-        .withColumn("_d2", l2sq(col("_vec"), col("_center")))
-        .groupBy(col(idCol))
-        .agg(min_by(struct(col("_vec"), col("_cell").as("cell")),
-          struct(col("_d2"), col("_cell"))).as("_m"))
-        .select(col(idCol), col("_m._vec").as("_vec"), col("_m.cell").as("cell"))
-      pqEncode(assigned, "_vec", model)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+    appendFrozen(spark, dir, batch, idCol)(c => (c, loadPqCodebook(spark, dir))) {
+      case (centers, pq) =>
+        pqCells(vecCells(batch, idCol, vecCol, centers, l2), idCol, "v", pq, rounded = false)
     }
 
-  /** Probe a composed IVF+PQ index: queries route to their `nProbe`
-    * best cells through the stored coarse centroids (directory-level
-    * partition pruning on the data scan, the q84 contract), and the
-    * pruned code rows are ADC-scored against per-(query, cell)
-    * broadcast lookup tables rebuilt from the stored codebook — the
-    * scan reads only (id, codes, cell). Returns `(query_id, idCol,
-    * d2_approx)`, `topK` ascending per query, ties → lowest id;
-    * identical to in-memory [[pqTopK]] restricted to the probed
-    * cells. */
-  def probeIvfPqIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
+  /** Probe a TRAINED composed index ([[probePq]], L2 routing like
+    * [[probeIvfIndex]], float ADC). */
+  def probeIvfPqIndex(spark: SparkSession,
       dir: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
-      topK: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val model = loadPqCodebook(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
-    val (probesLocal, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, centers, nProbe))
-    val tables = probesLocal.select(col("query_id"), col("_cell"),
-      adcTable(col("_qvec"), model, rounded = true).as("_tab"))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2_approx").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(tables), col("cell") === col("_cell"))
-      .select(col("query_id"), col(idCol),
-        adcScore("codes", model.m, model.k, rounded = true).as("d2_approx"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= topK)
-      .drop("_r")
-  }
+      topK: Int, nProbe: Int): DataFrame =
+    probePq(spark, dir, idCol, queries, qIdCol, qVecCol, topK, nProbe, l2, rounded = false)
 
   /** Compact the `cell=` data directories of a stored IVF / IVF-PQ
-    * index (any of the four writers — deterministic/trained, plain/PQ:
-    * they share the `dir/data` partitioned-by-cell layout). Repeated
+    * index (any of the five writers — deterministic, trained,
+    * deterministic PQ, trained PQ, exact micro: they share the
+    * `dir/data` partitioned-by-cell layout). Repeated
     * [[appendToIvfIndexDeterministic]]-family ingests leave one file
     * per batch per cell; past a point the probe's scan pays more in
     * file-open fan-in than in bytes. This is the merge half of that
@@ -1165,8 +949,9 @@ object Similarity {
     * rewritten), so at 100 TB a compaction pass costs the crowded
     * cells only, not an index rewrite. Row content is untouched —
     * probes before and after are identical (SimilaritySpec asserts
-    * bit-equality), centroids/codebook/meta are not involved. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+    * bit-equality for every family), centroids/codebook/meta are not
+    * involved. */
+  def compactIvfIndex(spark: SparkSession, dir: String,
       maxFilesPerCell: Int = 1): Unit = {
     require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
     // single-writer: files appended into a crowded cell between the
@@ -1265,23 +1050,40 @@ object Similarity {
   private def d2Micro(a: Column, b: Column): Column =
     graft.functions.ArrayOps.l2MicroSquared(a, b)
 
-  /** Centroid table as a nested literal: per-row argmin needs no join
-    * at all — k·dim longs folded into the plan (512 for k=8, d=64). */
-  private def kmCentersLit(centers: Seq[(Int, Array[Long])]): Column =
-    array(centers.map { case (cell, c) =>
-      struct(typedLit(c.toSeq).as("c"), lit(cell).as("cell")) }: _*)
+  /** The micro family's one routing: a vector column's (`_d2`, `_cell`)
+    * struct against every centroid. The centroid table is a nested
+    * literal — k·dim longs folded into the plan (512 for k=8, d=64) —
+    * so routing needs no join at all; `array_min` of it is the
+    * lexicographic argmin with the lowest-cell tie-break, and its
+    * `array_sort` prefix is a query's probe list. */
+  private def microRoute(v: Column, centers: Seq[(Int, Array[Long])]): Column =
+    transform(
+      array(centers.map { case (cell, c) =>
+        struct(typedLit(c.toSeq).as("c"), lit(cell).as("cell")) }: _*),
+      ct => struct(d2Micro(v, ct.getField("c")).as("_d2"), ct.getField("cell").as("_cell")))
 
   /** Nearest-centroid assignment: a NARROW projection (no join, no
-    * shuffle) — `array_min` over per-centroid (d2, cell) structs is the
-    * lexicographic argmin with the lowest-cell tie-break. */
-  private def kmAssign(vq: DataFrame, centers: Seq[(Int, Array[Long])]): DataFrame = {
-    val cand = transform(kmCentersLit(centers),
-      ct => struct(d2Micro(col("_v"), ct.getField("c")).as("_d2"),
-        ct.getField("cell").as("_cell")))
-    vq.withColumn("_b", array_min(cand))
+    * shuffle). */
+  private def kmAssign(vq: DataFrame, centers: Seq[(Int, Array[Long])]): DataFrame =
+    vq.withColumn("_b", array_min(microRoute(col("_v"), centers)))
       .select(col("_id"), col("_v"),
         col("_b._cell").as("_cell"), col("_b._d2").as("_d2"))
-  }
+
+  /** Micro cell rows: (idCol, v micro-units, cell). */
+  private def microCells(vq: DataFrame, idCol: String,
+      centers: Seq[(Int, Array[Long])]): DataFrame =
+    kmAssign(vq, centers).select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
+
+  /** Micro probe list: queries quantized to micro-units, each routed to
+    * its `nProbe` nearest cells (exact integer d2, ties → lowest cell). */
+  private def microProbes(queries: DataFrame, qIdCol: String, qVecCol: String,
+      centers: Seq[(Int, Array[Long])], nProbe: Int): DataFrame =
+    kmQuant(queries, qIdCol, qVecCol)
+      .select(col("_id").as("query_id"), col("_v").as("_qvec"),
+        explode(slice(array_sort(microRoute(col("_v"), centers)), 1, nProbe)).as("_p"))
+      .select(col("query_id"), col("_qvec"), col("_p._cell").as("_cell"))
+
+  private def microD2: Column = d2Micro(col("v"), col("_qvec")).as("d2")
 
   /** Quantized training frame: (id, micro-unit vector), nulls out. */
   private def kmQuant(df: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -1367,8 +1169,7 @@ object Similarity {
     * per-query rank window. The result (nQueries·k rows) is collected
     * and rebuilt as a local frame — bounded by the query batch, and it
     * lets the corpus cache be released deterministically instead of
-    * leaking past the lazy plan (the [[materializeProbes]]
-    * discipline). */
+    * leaking past the lazy plan. */
   def ivfTopKMicroExact(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nCentroids: Int, iters: Int, nProbe: Int): DataFrame = {
@@ -1393,101 +1194,51 @@ object Similarity {
     probeTrainedMicro(kmQuant(corpus, idCol, vecCol), idCol,
       queries, qIdCol, qVecCol, k, nProbe, centers)
 
-  /** Shared assign→route→rank core of the trained-IVF probes: assign
-    * the quantized corpus under `centers`, route each query to its
-    * `nProbe` nearest cells, exact-d2 top-k within the probed cells,
-    * result rebuilt as a local frame (bounded: nQueries × k — the
-    * [[materializeProbes]] discipline). */
+  /** Shared assign→route→rank core of the in-memory micro probes, the
+    * result rebuilt as a local frame (bounded: nQueries × k). */
   private def probeTrainedMicro(vq: DataFrame, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nProbe: Int, centers: Seq[(Int, Array[Long])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = vq.sparkSession
-    val assigned = kmAssign(vq, centers)
-    val pc = transform(kmCentersLit(centers),
-      ct => struct(d2Micro(col("_qv"), ct.getField("c")).as("_d2"),
-        ct.getField("cell").as("_cell")))
-    val probes = kmQuant(queries, qIdCol, qVecCol)
-      .select(col("_id").as("query_id"), col("_v").as("_qv"))
-      .select(col("query_id"), col("_qv"),
-        explode(slice(array_sort(pc), 1, nProbe)).as("_p"))
-      .select(col("query_id"), col("_qv"), col("_p._cell").as("_cell"))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col(idCol).asc)
-    val res = assigned.join(broadcast(probes), Seq("_cell"))
-      .select(col("query_id"), col("_id").as(idCol),
-        d2Micro(col("_v"), col("_qv")).as("d2"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-    val schema = res.schema
-    val rows = res.collect() // bounded: nQueries × k
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+      k: Int, nProbe: Int, centers: Seq[(Int, Array[Long])]): DataFrame =
+    localCopy(scoreCells(microCells(vq, idCol, centers),
+      microProbes(queries, qIdCol, qVecCol, centers, nProbe),
+      idCol, k, microD2, col("d2").asc))._1
 
   /** Persist the exact-trained IVF index: [[kmeansMicroExact]]
-    * centroids, corpus partitioned by trained cell under `dir/data`
-    * (micro-unit vectors — probes stay all-integer), centroids under
-    * `dir/centers`. Completes the stored-index matrix: q84 is
+    * centroids, (idCol, micro-unit v) rows partitioned by trained cell —
+    * probes stay all-integer. Completes the stored-index matrix: q84 is
     * stored+closed-form, q137 is stored+trained-float (recall-gated);
     * this is stored+TRAINED with the full write→probe round trip
-    * oracle-checkable (q152). Same fanout-avoiding write discipline as
-    * the other IVF writers. */
+    * oracle-checkable (q152). */
   def writeIvfIndexMicroExact(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int, iters: Int): Unit = {
-    // single-writer: same rebuild-vs-append race as the other writers
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val vq = kmQuant(corpus, idCol, vecCol)
-      vq.persist()
-      try {
-        val centers = trainMicro(vq, nCentroids, iters)
-        kmAssign(vq, centers)
-          .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-          .repartition(col("cell")) // one writer task per cell (fanout guard)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-        centers.map { case (cell, c) => (cell, c.toSeq) }
-          .toDF("cell", "center")
-          .write.mode("overwrite").parquet(s"$dir/centers")
-        writeMaxIdMeta(spark, dir, StoredIndex.requiredMaxId(corpus, idCol))
-      } finally vq.unpersist()
-    }
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val vq = kmQuant(corpus, idCol, vecCol).persist()
+    try writeStored(corpus, idCol, dir) {
+      val centers = trainMicro(vq, nCentroids, iters)
+      (microCells(vq, idCol, centers),
+        centers.map { case (cell, c) => (cell, c.toSeq) }.toDF("cell", "center"), None)
+    } finally vq.unpersist()
   }
 
   /** EXACT-trained twin of [[appendToIvfIndex]]: a new batch routes
     * through the STORED micro-unit centroids with the same all-integer
     * d2 argmin the probe and [[kmAssign]] use (ties → lowest cell) —
-    * frozen routing, no retraining, rows appended only into their
-    * `cell=` directories. Under the append-only id discipline the
-    * result is bit-identical to an index whose data is the union but
-    * whose centroids were trained on the ORIGINAL corpus — which is
-    * exactly what the frozen-model ingest contract means, and what
-    * makes the appended index hash-checkable end to end (q163): the
+    * frozen routing ([[appendFrozen]]). Under the append-only id
+    * discipline the result is bit-identical to an index whose data is
+    * the union but whose centroids were trained on the ORIGINAL corpus —
+    * which is exactly what the frozen-model ingest contract means, and
+    * what makes the appended index hash-checkable end to end (q163): the
     * oracle unrolls training over the base split, then assigns base and
-    * batch under the final centroids. Closes the float path's (q137)
-    * rows-only gap from the exact side. */
-  def appendToIvfIndexMicroExact(spark: org.apache.spark.sql.SparkSession,
+    * batch under the final centroids. */
+  def appendToIvfIndexMicroExact(spark: SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // bounded driver read (k centroid rows), outside the pending
-      // window: a missing/corrupt centers artifact fails fast here
-      readIvfCentersMicro(spark, dir)
-    } { centers =>
-      kmAssign(kmQuant(batch, idCol, vecCol), centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell")) // one writer task per cell (fanout guard)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
-    }
+    appendFrozen(spark, dir, batch, idCol)(microCenters)(
+      microCells(kmQuant(batch, idCol, vecCol), idCol, _))
 
-  /** Probe a [[writeIvfIndexMicroExact]] index: queries quantize to
-    * micro-units, probe cells come from the STORED centroids (exact
-    * integer d2, ties → lowest cell), and the data scan prunes to the
-    * probed `cell=` directories — nProbe/nCentroids of the corpus in
-    * I/O, with every ranking number an exact int64. Semantics identical
-    * to [[ivfTopKMicroExact]] over the same corpus/params by
-    * construction (spec-pinned), which is what lets q151's oracle shape
-    * serve the stored round trip. */
+  private def microCenters(centers: DataFrame): Seq[(Int, Array[Long])] =
+    centers.collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1).toSeq
+
   /** Load a [[writeIvfIndexMicroExact]] index's trained centroids
     * (model-sized collect). Besides the probe below, this is the
     * STREAMING routing hook: [[kmeansAssignMicro]] with these centers
@@ -1495,37 +1246,21 @@ object Similarity {
     * so the same call assigns ingest-time vectors to their trained
     * cells on a readStream, bit-equal to the batch assignment
     * (stream/batch parity spec-pinned in StreamingSpec). */
-  def readIvfCentersMicro(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(Int, Array[Long])] =
-    spark.read.parquet(s"$dir/centers")
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1).toSeq
+  def readIvfCentersMicro(spark: SparkSession, dir: String): Seq[(Int, Array[Long])] =
+    microCenters(spark.read.parquet(s"$dir/centers"))
 
-  def probeIvfIndexMicroExact(spark: org.apache.spark.sql.SparkSession,
+  /** Probe a [[writeIvfIndexMicroExact]] index: queries quantize to
+    * micro-units, probe cells come from the STORED centroids, and the
+    * scan prunes to the probed `cell=` directories ([[probeStored]]),
+    * with every ranking number an exact int64. Semantics identical to
+    * [[ivfTopKMicroExact]] over the same corpus/params by construction
+    * (spec-pinned), which is what lets q151's oracle shape serve the
+    * stored round trip. */
+  def probeIvfIndexMicroExact(spark: SparkSession,
       dir: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centers = readIvfCentersMicro(spark, dir)
-    val pc = transform(kmCentersLit(centers),
-      ct => struct(d2Micro(col("_qv"), ct.getField("c")).as("_d2"),
-        ct.getField("cell").as("_cell")))
-    val (probes, probedCells) = materializeProbes(spark,
-      kmQuant(queries, qIdCol, qVecCol)
-        .select(col("_id").as("query_id"), col("_v").as("_qv"))
-        .select(col("query_id"), col("_qv"),
-          explode(slice(array_sort(pc), 1, nProbe)).as("_p"))
-        .select(col("query_id"), col("_qv"), col("_p._cell").as("_cell")))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
-      .select(col("query_id"), col(idCol),
-        d2Micro(col("v"), col("_qv")).as("d2"))
-      .withColumn("_r", row_number().over(rank))
-      .filter(col("_r") <= k)
-      .drop("_r")
-  }
+      k: Int, nProbe: Int): DataFrame =
+    probeStored(spark, dir, idCol,
+      microProbes(queries, qIdCol, qVecCol, readIvfCentersMicro(spark, dir), nProbe),
+      k, microD2, col("d2").asc)
 }

@@ -126,8 +126,8 @@ object Sketches {
     * [[approxDistinct]] (whose HLL registers no second engine can
     * check). Output: group, k_used, kth_min, est_distinct. */
   def kmvDistinct(df: DataFrame, groupCol: String, textCol: String,
-      shingleN: Int, k: Int, salt: Int = 32): DataFrame =
-    kmvSketchEstimate(kmvSketch(df, groupCol, textCol, shingleN, k, salt),
+      shingleN: Int, k: Int): DataFrame =
+    kmvSketchEstimate(kmvSketch(df, groupCol, textCol, shingleN, k),
       groupCol, k)
 
   /** Storable sketch form: per group the sorted ≤k minimum hashes — the
@@ -139,11 +139,9 @@ object Sketches {
     * tasks × groups × k longs replaces the windowed form's global
     * (g, h) distinct + salt-stage Window + merge-stage Window (3
     * exchanges, 2 whole-bucket sorts). Values are bit-identical
-    * (SketchesSpec pins the windowed twin, [[kmvMinRowsWindowed]]).
-    * `salt` is retained for signature stability; it shaped only the
-    * retired windowed execution, never results. */
+    * (SketchesSpec pins the windowed twin, [[kmvSketchWindowed]]). */
   def kmvSketch(df: DataFrame, groupCol: String, textCol: String,
-      shingleN: Int, k: Int, salt: Int = 32): DataFrame = {
+      shingleN: Int, k: Int): DataFrame = {
     require(k >= 2, s"KMV needs k >= 2, got $k")
     shingleHashesRaw(df, groupCol, textCol, shingleN)
       .groupBy(col("g").as(groupCol))

@@ -73,7 +73,7 @@ class PlanContractsSpec extends SparkSpec {
 
   test("the KMV sketch never sorts a group whole: one bounded set aggregate") {
     val df = graft.operators.Sketches.kmvDistinct(
-      t(spark, dir, "documents"), "source", "text", 3, 128, salt = 32)
+      t(spark, dir, "documents"), "source", "text", 3, 128)
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // round 16: the salted two-stage windowed top-k became ONE

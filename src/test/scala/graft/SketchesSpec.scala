@@ -94,14 +94,6 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
-  test("kmv sketch result is salt-independent (execution strategy, not semantics)") {
-    val a = Sketches.kmvDistinct(kmvDocs, "source", "text", 3, 64, salt = 1)
-      .orderBy("source").collect()
-    val b = Sketches.kmvDistinct(kmvDocs, "source", "text", 3, 64, salt = 17)
-      .orderBy("source").collect()
-    a shouldBe b
-  }
-
   test("kmvMerge of per-segment sketches equals the sketch of the union") {
     val k = 64
     val segments = (0 to 2).map(m => Sketches.kmvSketch(

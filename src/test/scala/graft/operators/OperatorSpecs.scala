@@ -1159,6 +1159,70 @@ class SimilaritySpec extends SparkSpec {
     cellFiles() shouldBe after
   }
 
+  test("every IVF writer family compacts to one file per crowded cell, probe-identically") {
+    val rnd = new scala.util.Random(37)
+    val all = (0 until 120).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+    def batch(lo: Int, hi: Int) = all.slice(lo, hi).toDF("vec_id", "embedding")
+    val queries = batch(0, 3)
+    final case class Family(name: String,
+        write: (org.apache.spark.sql.DataFrame, String) => Unit,
+        append: (org.apache.spark.sql.DataFrame, String) => Unit,
+        probe: String => org.apache.spark.sql.DataFrame)
+    val families = Seq(
+      Family("deterministic",
+        (df, d) => Similarity.writeIvfIndexDeterministic(df, "vec_id", "embedding", d, 4),
+        (df, d) => Similarity.appendToIvfIndexDeterministic(spark, d, df, "vec_id", "embedding"),
+        d => Similarity.probeIvfIndexDeterministic(spark, d, "vec_id",
+          queries, "vec_id", "embedding", k = 10, nProbe = 2)),
+      Family("trained",
+        (df, d) => Similarity.writeIvfIndex(df, "vec_id", "embedding", d, 4,
+          trainFraction = 1.0),
+        (df, d) => Similarity.appendToIvfIndex(spark, d, df, "vec_id", "embedding"),
+        d => Similarity.probeIvfIndex(spark, d, "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = 10, nProbe = 2)),
+      Family("deterministic PQ",
+        (df, d) => Similarity.writeIvfPqIndexDeterministic(df, "vec_id", "embedding", d, 4,
+          m = 2, k = 4),
+        (df, d) => Similarity.appendToIvfPqIndexDeterministic(spark, d, df, "vec_id", "embedding"),
+        d => Similarity.probeIvfPqIndexDeterministic(spark, d, "vec_id",
+          queries, "vec_id", "embedding", topK = 10, nProbe = 2)),
+      Family("trained PQ",
+        (df, d) => Similarity.writeIvfPqIndex(df, "vec_id", "embedding", d, 4,
+          m = 2, k = 4, trainFraction = 1.0),
+        (df, d) => Similarity.appendToIvfPqIndex(spark, d, df, "vec_id", "embedding"),
+        d => Similarity.probeIvfPqIndex(spark, d, "vec_id",
+          queries, "vec_id", "embedding", topK = 10, nProbe = 2)),
+      Family("exact micro",
+        (df, d) => Similarity.writeIvfIndexMicroExact(df, "vec_id", "embedding", d, 4, iters = 2),
+        (df, d) => Similarity.appendToIvfIndexMicroExact(spark, d, df, "vec_id", "embedding"),
+        d => Similarity.probeIvfIndexMicroExact(spark, d, "vec_id",
+          queries, "vec_id", "embedding", k = 10, nProbe = 2)))
+    def cellFiles(dir: String): Map[String, Int] =
+      new java.io.File(s"$dir/data").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+        .map(c => c.getName -> c.listFiles().count(_.getName.endsWith(".parquet")))
+        .toMap
+    // Row.toString spells every double exactly, so equal strings are
+    // bit-identical rows
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    for (f <- families) withClue(s"${f.name}: ") {
+      val dir = tmpDir("ivf_compact_family")
+      f.write(batch(0, 60), dir)
+      f.append(batch(60, 90), dir)
+      f.append(batch(90, 120), dir)
+      val crowded = cellFiles(dir).filter(_._2 > 1).keySet
+      crowded should not be empty
+      val pre = rows(f.probe(dir))
+      pre should not be empty
+      Similarity.compactIvfIndex(spark, dir, maxFilesPerCell = 1)
+      val after = cellFiles(dir)
+      crowded.foreach(c => after(c) shouldBe 1)
+      rows(f.probe(dir)) shouldBe pre
+      spark.read.parquet(s"$dir/data").count() shouldBe 120L
+    }
+  }
+
   test("rerankExact over a full-coverage shortlist equals brute-force top-k") {
     val rnd = new scala.util.Random(61)
     val corpus = (0 until 50).map(i => (i.toLong, Array.fill(32)(rnd.nextFloat() * 2 - 1)))
